@@ -16,10 +16,11 @@ import numpy as np
 
 from pitfeat import synth
 
-# Rows of work per workload; "tiny" is the smoke-test size. A full run (three
-# set-ups plus the timed repetitions) takes 35-50 s on 4 cores. At these sizes
-# most of a repetition is per-job Spark latency; pit_build is sized up to where
-# its run-to-run spread fell (19.6% at 4000 conversations, 13.9% at 10000).
+# Rows of work per workload; "tiny" is the smoke-test size. Sizes are set by
+# the time budget of a run (35-50 s on 4 cores, most of it the input session,
+# a cold JVM and the first repetition). At these sizes a repetition is mostly
+# per-job Spark latency: corpus_neardup at half these rows or twice the
+# vectors takes about as long.
 SIZES = {
     "full": {
         "pit_build": {"n_convs": 10000, "avg_turns": 20},
@@ -50,12 +51,12 @@ def input_dir(work: str, workload: str, seed: int, size: str) -> str:
     return os.path.join(work, "inputs", f"{workload}-{seed}-{size}-{tag}")
 
 
-def ensure_inputs(spark, work: str, workload: str, seed: int, size: str) -> str:
-    """Write the workload's inputs unless a complete copy is cached."""
-    d = input_dir(work, workload, seed, size)
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
+def cached(d: str) -> bool:
+    return os.path.exists(os.path.join(d, "_DONE"))
+
+
+def ensure_inputs(spark, d: str, workload: str, seed: int, size: str) -> None:
+    """Write the workload's inputs into ``d`` (see ``input_dir``)."""
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
     p = SIZES[size][workload]
@@ -72,9 +73,8 @@ def ensure_inputs(spark, work: str, workload: str, seed: int, size: str) -> str:
             os.path.join(d, "embeddings")
         )
         write_documents(os.path.join(d, "documents.parquet"), p["n_docs"], seed)
-    with open(done, "w") as f:
+    with open(os.path.join(d, "_DONE"), "w") as f:
         f.write("ok")
-    return d
 
 
 def gen_documents(n_docs: int, seed: int) -> list[str]:

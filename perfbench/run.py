@@ -4,13 +4,14 @@
 
 Runs one workload (see BENCHMARK.json) on ``local[<cpus>]`` through the
 session users get from ``pitfeat.session.get_spark``, from the root of a
-checkout. Inputs are generated from ``--seed`` and cached under
-``perfbench/.work``. Set-up (session start, Python worker warm-up and one
-untimed repetition) is repeated ``SETUP_CYCLES`` times with a fresh
-SparkContext and reported as its median. Timed repetitions then run for
-``--seconds``; each re-reads its inputs from files and writes its complete
-result, and every result is checked against an independent oracle after
-the timed region.
+checkout. Inputs are generated from ``--seed`` in a session of their own
+and cached under ``perfbench/.work``. Set-up is what a user's first job
+costs: a fresh JVM from ``get_spark``, Python worker warm-up and the first,
+untimed repetition. Then ``--seconds`` / ``rep_s`` timed
+repetitions run, ``rep_s`` being the workload's nominal warm repetition on 4
+cores. Each re-reads its inputs from files and writes its complete result,
+and every result is checked against an independent oracle after the timed
+region.
 
 ``--trace 1`` times half the repetitions untraced and half with a span per
 layer, and reports the per-layer metrics instead of the end-to-end ones.
@@ -36,7 +37,6 @@ import uuid
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, "perfbench", ".work")
-SETUP_CYCLES = 3
 MIN_REPS = 3
 KEEP_INPUT_SETS = 12
 
@@ -94,11 +94,9 @@ class Session:
         self.spark = None
 
     def start(self) -> float:
-        """(Re)start the session; returns the seconds get_spark took."""
+        """Start the session; returns the seconds get_spark took."""
         from pitfeat.session import get_spark
 
-        if self.spark is not None:
-            self.spark.stop()
         t0 = time.perf_counter()
         self.spark = get_spark("perfbench", master=self.master)
         return time.perf_counter() - t0
@@ -115,6 +113,7 @@ class Session:
 
         if self.spark is not None:
             self.spark.stop()
+            self.spark = None
         gw = SparkContext._gateway
         if gw is not None:
             gw.shutdown()
@@ -164,7 +163,7 @@ def run(args, run_dir: str) -> tuple[dict, int]:
         tr = Tracer(session.spark, f"rep{rep_no}") if traced else NullTracer()
         t0 = time.perf_counter()
         try:
-            res = wl.rep(out, tr)
+            res = wl.rep(session.spark, out, tr)
             res["job_s"] = time.perf_counter() - t0
         except Exception:
             traceback.print_exc()
@@ -173,32 +172,34 @@ def run(args, run_dir: str) -> tuple[dict, int]:
         return res
 
     try:
-        start_s = [session.start()]
-        t0 = time.perf_counter()
-        in_dir = inputs.ensure_inputs(session.spark, WORK, args.workload, args.seed, args.size)
-        log(f"inputs {time.perf_counter() - t0:.3f}")
-        prune_inputs(in_dir)
-        wl = WORKLOADS[args.workload](session.spark, in_dir, args.seed)
-        setup_s = []
-        for cycle in range(SETUP_CYCLES):
+        in_dir = inputs.input_dir(WORK, args.workload, args.seed, args.size)
+        if not inputs.cached(in_dir):
+            # in a session of its own, so the set-up below starts cold
+            session.start()
             t0 = time.perf_counter()
-            if cycle:
-                start_s.append(session.start())
-                wl.spark = session.spark
-            session.warm_workers()
-            t1 = time.perf_counter()
-            warm = one_rep(False)
-            log(f"setup cycle {cycle}: start {start_s[-1]:.3f} workers {t1 - t0:.3f} rep {time.perf_counter() - t1:.3f}")
-            shutil.rmtree(warm["out_dir"], ignore_errors=True)
-            setup_s.append(start_s[-1] + time.perf_counter() - t0)
-        log(f"setup cycles {[round(s, 3) for s in setup_s]}")
+            inputs.ensure_inputs(session.spark, in_dir, args.workload, args.seed, args.size)
+            log(f"inputs {time.perf_counter() - t0:.3f}")
+            session.close()
+        prune_inputs(in_dir)
+        wl = WORKLOADS[args.workload](in_dir, args.seed)
+        # set-up as a user meets it: a fresh JVM, the Python workers, and
+        # the first repetition, which compiles the job's code
+        t0 = time.perf_counter()
+        start_s = session.start()
+        session.warm_workers()
+        t1 = time.perf_counter()
+        warm = one_rep(False)
+        setup_s = time.perf_counter() - t0
+        shutil.rmtree(warm["out_dir"], ignore_errors=True)
+        log(f"setup {setup_s:.3f}: start {start_s:.3f} workers {t1 - t0 - start_s:.3f} first rep {warm['job_s']:.3f}")
 
-        phases = [(False, args.seconds / 2), (True, args.seconds / 2)] if args.trace else [(False, args.seconds)]
-        for traced, budget in phases:
-            t_end, n = time.perf_counter() + budget, 0
-            while n < (MIN_REPS if len(phases) == 1 else 2) or time.perf_counter() < t_end:
-                reps.append(one_rep(traced))
-                n += 1
+        # A fixed count, not a deadline: the JVM keeps warming up for many
+        # repetitions, so a count set by the host's speed of the moment
+        # would move the median along that curve and amplify host drift.
+        n_reps = max(MIN_REPS, round(args.seconds / wl.rep_s))
+        phases = [(False, max(2, n_reps // 2)), (True, max(2, n_reps - n_reps // 2))] if args.trace else [(False, n_reps)]
+        for traced, n in phases:
+            reps.extend(one_rep(traced) for _ in range(n))
         for r in reps:
             if r["traced"]:
                 r["layers"] = r["tracer"].layer_totals()
@@ -242,19 +243,19 @@ def _m(value, unit: str) -> dict:
     return {"value": value, "unit": unit}
 
 
-def end_to_end(ok: list[dict], setup_s: list[float], rows_in: int) -> dict:
+def end_to_end(ok: list[dict], setup_s: float, rows_in: int) -> dict:
     if not ok:
         return {}
     job_s = statistics.median(r["job_s"] for r in ok)
     return {
-        "setup_s": _m(statistics.median(setup_s), "s"),
+        "setup_s": _m(setup_s, "s"),
         "job_s": _m(job_s, "s"),
         "rows_per_s": _m(rows_in / job_s, "rows/s"),
         "oracle_recall": _m(statistics.median(r["hits"] / r["total"] for r in ok), "ratio"),
     }
 
 
-def layer_metrics(ok: list[dict], start_s: list[float], peak_mb: float, cpus: int) -> dict:
+def layer_metrics(ok: list[dict], start_s: float, peak_mb: float, cpus: int) -> dict:
     traced = [r for r in ok if r["traced"]]
     plain = [r for r in ok if not r["traced"]]
     if not traced or not plain:
@@ -284,7 +285,7 @@ def layer_metrics(ok: list[dict], start_s: list[float], peak_mb: float, cpus: in
     units.update(COUNTERS)
     units["trace.coverage"] = "ratio"
     metrics = {k: _m(statistics.median(v[k] for v in per_rep), units[k]) for k in per_rep[0]}
-    metrics["session.start_s"] = _m(statistics.median(start_s), "s")
+    metrics["session.start_s"] = _m(start_s, "s")
     metrics["session.peak_rss_mb"] = _m(peak_mb, "MB")
     overhead = statistics.median(r["job_s"] for r in traced) / statistics.median(r["job_s"] for r in plain) - 1
     metrics["trace.overhead_frac"] = _m(overhead, "ratio")

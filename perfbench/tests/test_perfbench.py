@@ -202,3 +202,13 @@ def test_hotkey_check_catches_wrong_ewma(tmp_path):
     bad = exp.copy()
     bad.loc[4, "f_0_ewma"] += 1e-3
     assert oracles.check_hotkey(exp, bad, 5, 5)[0]
+
+
+def test_every_pipeline_step_has_a_layer():
+    """The traced pit_build run hooks every public Pipeline step; a step
+    without a layer would fail it, so a new step must be mapped here."""
+    from perfbench.workloads import STAGE1, STEP_LAYER
+    from pitfeat.pipeline import Pipeline
+
+    steps = {n for n, fn in vars(Pipeline).items() if callable(fn) and not n.startswith("_")}
+    assert steps - STAGE1 <= set(STEP_LAYER)

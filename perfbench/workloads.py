@@ -7,7 +7,9 @@ forced by writing it; the next layer reads that written output.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import sys
 import types
 
 import numpy as np
@@ -35,14 +37,87 @@ def _write(sp, df, path: str) -> None:
     df.write.parquet(path)
 
 
+# Layer of each Pipeline step build_rest may call. The traced repetition runs
+# build_rest itself with these steps hooked, so its spans cover exactly the
+# job's own chain; a step missing here fails the traced run.
+STEP_LAYER = {
+    "with_gap": "ops.windows",
+    "with_lags": "ops.windows",
+    "rolling": "ops.windows",
+    "rolling_time": "ops.windows",
+    "cumulative_tools": "ops.windows",
+    "sessionize": "ops.windows",
+    "role_ngrams": "ops.windows",
+    "normalize": "ops.normalize",
+    "assemble": "ops.vectors",
+}
+# Pipeline entry points of stage 1, which build_rest does not call
+STAGE1 = {"from_transcripts", "from_df", "asof_snapshots"}
+
+
+class StepSpans:
+    """Open one span per layer while build_rest runs. A step of a new layer
+    first writes the open layer's output and reads it back, so no span
+    covers another's execution."""
+
+    def __init__(self, spark, tr, out: str):
+        self.spark, self.tr, self.out = spark, tr, out
+        self.stack = contextlib.ExitStack()
+        self.sp = self.layer = None
+
+    def step(self, p, layer: str) -> None:
+        if layer == self.layer:
+            return
+        if self.sp is not None:
+            p.df = self.spark.read.parquet(self.finish(p.df))
+        self.sp = self.stack.enter_context(self.tr.span(layer))
+        self.layer = layer
+
+    def finish(self, df) -> str:
+        """Write the open layer's output, close its span; returns the path."""
+        path = os.path.join(self.out, "t_" + self.layer.split(".")[-1])
+        _write(self.sp, df, path)
+        self.stack.close()
+        return path
+
+    @contextlib.contextmanager
+    def hooked(self):
+        """Route every public Pipeline step through ``step`` while inside."""
+        saved = {}
+
+        def hook(name, fn):
+            def run_step(p, *args, **kwargs):
+                if name not in STEP_LAYER:
+                    raise KeyError(f"build_rest calls Pipeline.{name}, which has no layer in STEP_LAYER")
+                self.step(p, STEP_LAYER[name])
+                res = fn(p, *args, **kwargs)
+                self.sp.called()
+                return res
+
+            return run_step
+
+        for name, fn in vars(Pipeline).items():
+            if callable(fn) and not name.startswith("_") and name not in STAGE1:
+                saved[name] = fn
+                setattr(Pipeline, name, hook(name, fn))
+        try:
+            yield
+        except BaseException:
+            self.stack.__exit__(*sys.exc_info())
+            raise
+        finally:
+            for name, fn in saved.items():
+                setattr(Pipeline, name, fn)
+
+
 class PitBuild:
     """Flagship staged build of jobs/build_features.py with resume
     checkpoints: as-of, windows, normalize (prune), assemble."""
 
     name = "pit_build"
+    rep_s = 2.5  # nominal warm repetition on 4 cores; sets the timed count
 
-    def __init__(self, spark, input_dir: str, seed: int):
-        self.spark = spark
+    def __init__(self, input_dir: str, seed: int):
         self.args = types.SimpleNamespace(
             transcripts=os.path.join(input_dir, "transcripts"),
             snapshots=os.path.join(input_dir, "snapshots"),
@@ -51,16 +126,16 @@ class PitBuild:
         self.inputs = [self.args.transcripts, self.args.snapshots]
         self.rows_in = _count(self.args.transcripts)
 
-    def _ckpt(self, out: str, stage: str, fn):
+    def _ckpt(self, spark, out: str, stage: str, fn):
         return resume_or_compute(
-            self.spark, os.path.join(out, stage), stage, self.cfg.config_hash(), fn, inputs=self.inputs
+            spark, os.path.join(out, stage), stage, self.cfg.config_hash(), fn, inputs=self.inputs
         )[0]
 
-    def rep(self, out: str, tr) -> dict:
-        spark, cfg = self.spark, self.cfg
+    def rep(self, spark, out: str, tr) -> dict:
+        cfg = self.cfg
         if not tr.enabled:
-            a = self._ckpt(out, "asof", lambda: bf.build_asof(spark, self.args, cfg))
-            self._ckpt(out, "features", lambda: bf.build_rest(spark, self.args, cfg, a).df)
+            a = self._ckpt(spark, out, "asof", lambda: bf.build_asof(spark, self.args, cfg))
+            self._ckpt(spark, out, "features", lambda: bf.build_rest(spark, self.args, cfg, a).df)
             return {"out": out}
         with tr.span("io") as sp:
             t = read_transcripts(spark, self.args.transcripts)
@@ -74,31 +149,14 @@ class PitBuild:
             sp.called()
             _write(sp, df, os.path.join(out, "t_asof"))
         with tr.span("checkpoint") as sp:
-            a = self._ckpt(out, "asof", lambda: spark.read.parquet(os.path.join(out, "t_asof")))
+            a = self._ckpt(spark, out, "asof", lambda: spark.read.parquet(os.path.join(out, "t_asof")))
             sp.output(path=os.path.join(out, "asof", "data"))
-        fcols = [c for c in a.columns if c.startswith("f_")]
-        with tr.span("ops.windows") as sp:
-            p = (
-                Pipeline(spark, a, cfg, fcols, {})
-                .with_gap()
-                .rolling("gap_s", ["mean", "max"], window=cfg.rolling_turns)
-                .cumulative_tools()
-                .sessionize()
-            )
-            sp.called()
-            _write(sp, p.df, os.path.join(out, "t_windows"))
-        with tr.span("ops.normalize") as sp:
-            win = spark.read.parquet(os.path.join(out, "t_windows"))
-            p = Pipeline(spark, win, cfg, p.feature_cols, p.manifest).normalize(prune=True)
-            sp.called()
-            _write(sp, p.df, os.path.join(out, "t_normalize"))
-        with tr.span("ops.vectors") as sp:
-            norm = spark.read.parquet(os.path.join(out, "t_normalize"))
-            p = Pipeline(spark, norm, cfg, p.feature_cols, p.manifest).assemble()
-            sp.called()
-            _write(sp, p.df.select("conv_id", "turn_idx", "ts", "features"), os.path.join(out, "t_vectors"))
+        steps = StepSpans(spark, tr, out)
+        with steps.hooked():
+            p = bf.build_rest(spark, self.args, cfg, a)
+            final = steps.finish(p.df)
         with tr.span("checkpoint") as sp:
-            self._ckpt(out, "features", lambda: spark.read.parquet(os.path.join(out, "t_vectors")))
+            self._ckpt(spark, out, "features", lambda: spark.read.parquet(final))
             sp.output(path=os.path.join(out, "features", "data"))
         return {"out": out, "counters": {"ops.normalize.pruned_cols": len(p.manifest["minmax"]["degenerate"])}}
 
@@ -125,10 +183,10 @@ class AsofHotkey:
     EWMA over a joined snapshot feature."""
 
     name = "asof_hotkey"
+    rep_s = 1.6
     SAMPLE_CONVS = 30
 
-    def __init__(self, spark, input_dir: str, seed: int):
-        self.spark = spark
+    def __init__(self, input_dir: str, seed: int):
         self.t_path = os.path.join(input_dir, "transcripts")
         self.s_path = os.path.join(input_dir, "snapshots")
         self.rows_in = _count(self.t_path)
@@ -139,8 +197,7 @@ class AsofHotkey:
         rng = np.random.default_rng(seed)
         self.convs = ["c0"] + sorted(rng.choice(ids, size=min(self.SAMPLE_CONVS, len(ids)), replace=False).tolist())
 
-    def rep(self, out: str, tr) -> dict:
-        spark = self.spark
+    def rep(self, spark, out: str, tr) -> dict:
         t, s = spark.read.parquet(self.t_path), spark.read.parquet(self.s_path)
         res_path = os.path.join(out, "result")
         if not tr.enabled:
@@ -174,12 +231,12 @@ class CorpusNeardup:
     pairs, and the quality score over a document corpus."""
 
     name = "corpus_neardup"
-    KNN = {"k": oracles.KNN_K, "method": "ivf", "nlist": 64, "nprobe": 8}
+    rep_s = 2.5
+    KNN = {"k": oracles.KNN_K, "method": "ivf", "nlist": 16, "nprobe": 4}
     SAMPLE_QUERIES = 200
     SAMPLE_DOCS = 500
 
-    def __init__(self, spark, input_dir: str, seed: int):
-        self.spark = spark
+    def __init__(self, input_dir: str, seed: int):
         self.e_path = os.path.join(input_dir, "embeddings")
         self.d_path = os.path.join(input_dir, "documents.parquet")
         self.n_vecs = _count(self.e_path)
@@ -187,8 +244,7 @@ class CorpusNeardup:
         self.rows_in = self.n_vecs + self.n_docs
         self.seed = seed
 
-    def rep(self, out: str, tr) -> dict:
-        spark = self.spark
+    def rep(self, spark, out: str, tr) -> dict:
         e, d = spark.read.parquet(self.e_path), spark.read.parquet(self.d_path)
         paths = {k: os.path.join(out, k) for k in ("knn", "pairs", "quality")}
         steps = (
