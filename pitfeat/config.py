@@ -29,7 +29,6 @@ class PitfeatConfig:
 
     # --- normalization (A2-A4) ---
     prune_degenerate: bool = True
-    nan_passthrough: bool = True
 
     # --- DATABLOCK mirror (S5) ---
     rows_per_block: int = 4096

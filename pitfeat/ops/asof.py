@@ -139,15 +139,16 @@ def asof_join(
     the greatest ``right_ts <= left_ts`` (strict ``<`` when
     ``allow_exact=False``; earliest-following when ``direction='forward'``,
     closest-in-time when ``direction='nearest'`` (equidistant resolves to the
-    preceding row, matching pandas) — both cogroup strategy only).
-    Left-outer: unmatched rows keep nulls.
+    preceding row, matching pandas). Every strategy supports every direction
+    (the module docstring's support matrix). Left-outer: unmatched rows keep
+    nulls.
 
     Parameters beyond the obvious:
     - ``tolerance_s``: staleness bound — a match older than this many seconds
       is nulled out (whole snapshot row, atomically).
     - ``strategy``: ``window`` (pure-JVM union-tag ffill, default) |
       ``cogroup`` (bucketed applyInPandas merge_asof) | ``merge``
-      (range-partitioned streaming merge) — see module docstring.
+      (hash-co-located, sorted streaming merge) — see module docstring.
     - ``salt_buckets``: J2 skew fanout. Alone it salts EVERY key (kept for
       the driver contract; measured 5x slower than unsalted on a 30%-hot
       zipf fixture because the right side replicates xB for all keys).

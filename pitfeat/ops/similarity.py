@@ -8,13 +8,13 @@ for the ANN ops, using the SAME numpy bucket math as the executor
 kernels), a per-partition per-query top-k keeps boundary ties, and only
 ~partitions x nq x k rows reach the global rank. No pair rows, no explode,
 no interpreted-HOF scoring in any hot path; scores use per-row pairwise
-summation so results are bit-identical at any parallelism. The r3
-pair-join implementations (``_*_pairjoin``) are retained as parity oracles
-only. Near-dup pair mining (``embedding_near_dup_pairs``) stays bucketed
-(written assignment table, hot-bucket cap) with an Arrow pair-cosine
-verify kernel.
+summation so results are bit-identical at any parallelism. Corpus-wide
+KNN (``knn_join``) scores bucket/list members against each other inside
+grouped Arrow kernels. Near-dup pair mining (``embedding_near_dup_pairs``)
+stays bucketed (written assignment table, hot-bucket cap) with an Arrow
+pair-cosine verify kernel. The pair-join parity oracles these paths
+replaced live in ``tests/oracle_similarity.py``.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
@@ -33,54 +33,6 @@ _LIVE_QUERY_BCASTS: list = []
 _LIVE_QUERY_BCASTS_LOCK = _threading.Lock()
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def with_cosine(df: DataFrame, col_a: str, col_b: str, out: str = "cosine") -> DataFrame:
-    a, b = F.col(col_a), F.col(col_b)
-    denom = _norm(a) * _norm(b)
-    return df.withColumn(out, F.when(denom > 0, _dot(a, b) / denom).otherwise(F.lit(0.0)))
-
-
-
-
-def _score_and_rank(
-    joined: DataFrame, k: int, id_col: str, query_id_col: str,
-    corpus_vec: str = "__cv", query_vec: str = "__qv",
-) -> DataFrame:
-    """Shared exact-cosine re-rank tail for cosine_topk/lsh_topk/ivf_topk —
-    ONE definition so tie-breaks (cosine desc, id asc) and the zero-denominator
-    rule can never silently diverge between the exact and ANN paths."""
-    from pyspark.sql import Window
-
-    denom = _norm(F.col(corpus_vec)) * _norm(F.col(query_vec))
-    # coalesce: a dim-mismatched pair's dot is NULL (zip_with null-pads the
-    # shorter array) — it scores 0.0, same as a null vector, so the pair-join
-    # oracles and the matrix engine agree on EVERY invalid-vector shape
-    # (ADVICE r4: they previously diverged on ragged vectors, NULL-ranked-
-    # last here vs 0.0 in the engine)
-    scored = joined.withColumn(
-        "cosine",
-        F.coalesce(
-            F.when(denom > 0, _dot(F.col(corpus_vec), F.col(query_vec)) / denom),
-            F.lit(0.0),
-        ),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Matrix-scored top-k engine (shared by cosine_topk / lsh_topk / ivf_topk)
 # ---------------------------------------------------------------------------
@@ -93,24 +45,79 @@ def _score_and_rank(
 # corpus computes a (batch x nq) score matmul against the broadcast query
 # matrix, keeps a per-partition top-k per query (ties at the boundary kept
 # in full), and only ~n_partitions x nq x k tiny rows reach the final
-# global rank. The pair-join implementations are retained below as parity
-# oracles (tests assert identical output), the same discipline as
-# _multi_table_buckets_expr.
+# global rank.
 
 
-def _rank_topk(scored: DataFrame, k: int, id_col: str, query_id_col: str) -> DataFrame:
-    """Global (cosine desc, id asc) rank-to-k over pre-scored candidates —
-    the same tie rule as _score_and_rank, single-sourced for the engine."""
+def _rank_topk(
+    cands: DataFrame, k: int, key_col: str, id_col: str, dedup: bool = False
+) -> DataFrame:
+    """Global top-k per ``key_col`` over pre-scored candidates, tie rule
+    (cosine desc, ``id_col`` asc) — the ONE rank for the matrix engine
+    (key = query id) and knn_join (key = row id, id = nbr_id).
+
+    ``dedup``: only knn_join's LSH path needs it. A pair co-bucketed in
+    several tables arrives once per co-bucketing, and the copies' GEMM
+    cosines can differ in the last ulp (different member sets => different
+    BLAS shapes), so the dedup is an aggregate — max(cosine) per pair —
+    which is deterministic, where dropDuplicates would keep a
+    shuffle-order-lucky copy. Every other path produces each pair exactly
+    once (an IVF member lives in one inverted list and a (member, prober)
+    pair meets in one grid cell; the matrix engine holds each corpus id in
+    one partition), where the aggregate would be a full extra shuffle for
+    an identity."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
+    w = Window.partitionBy(key_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+    if dedup:
+        cands = cands.groupBy(key_col, id_col).agg(F.max("cosine").alias("cosine"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        cands.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select(key_col, id_col, "cosine", "rank")
     )
+
+
+def _decode_vectors(raw, dim: int):
+    """Object array of per-row vectors -> (V, ok): a (n, dim) float64
+    matrix with zero rows where a vector is null or not ``dim`` wide, and
+    the validity mask. The ONE decode for every kernel and driver step that
+    takes vectors row by row, so all of them agree on what is invalid."""
+    import numpy as np
+
+    ok = np.array([v is not None and len(v) == dim for v in raw], dtype=bool)
+    V = np.zeros((len(ok), dim), dtype=np.float64)
+    if ok.any():
+        V[ok] = np.vstack([np.asarray(v, dtype=np.float64) for v in raw[ok]])
+    return V, ok
+
+
+def _fill_valid(fn, V, ok, width: int, dtype):
+    """(n, width) ``fn(V[ok])`` on the valid rows, zeros (bucket / list 0)
+    on the invalid ones — the null semantics of every assignment kernel."""
+    import numpy as np
+
+    out = np.zeros((len(V), width), dtype=dtype)
+    if ok.any():
+        out[ok] = fn(V[ok])
+    return out
+
+
+def _rowwise_udf(fn, width: int, dtype, dim: int, return_type: str):
+    """pandas_udf: vector column -> ``return_type`` array column holding
+    ``fn`` of each valid row (one call per Arrow batch, _fill_valid null
+    semantics). The shared body of the fused assignment kernels
+    (_table_sigs_udf, _ivf_lists_udf)."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def kernel(vecs):
+        if len(vecs) == 0:
+            return pd.Series([], dtype=object)
+        V, ok = _decode_vectors(vecs.to_numpy(), dim)
+        return pd.Series(list(_fill_valid(fn, V, ok, width, dtype)))
+
+    kernel.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
+    return pandas_udf(kernel, return_type)
 
 
 MAX_ENGINE_QUERIES = 1_048_576
@@ -143,8 +150,6 @@ def _query_matrix(queries: DataFrame, query_id_col: str, vec_col: str, dim: int)
     a sanity backstop, not the design point: for corpus-vs-corpus top-k use
     knn_join (bucketed, never collects the corpus), and for threshold pairs
     embedding_near_dup_pairs."""
-    import numpy as np
-
     # rows AND bytes gate (ADVICE r5): the byte cap keeps the collected
     # matrix inside the driver/broadcast budget at ANY dim
     max_rows = min(MAX_ENGINE_QUERIES, MAX_ENGINE_QUERY_BYTES // max(dim * 8, 1))
@@ -166,14 +171,8 @@ def _query_matrix(queries: DataFrame, query_id_col: str, vec_col: str, dim: int)
             "broadcast; use knn_join for corpus-vs-corpus top-k, or "
             "embedding_near_dup_pairs for threshold pairs"
         )
-    qids, vecs, ok = [], [], []
-    for qid, v in zip(pdf["__qid"], pdf["__qv"]):
-        valid = v is not None and len(v) == dim
-        qids.append(qid)
-        ok.append(valid)
-        vecs.append(np.asarray(v, dtype=np.float64) if valid else np.zeros(dim))
-    Q = np.vstack(vecs) if vecs else np.zeros((0, dim))
-    return qids, Q, np.array(ok, dtype=bool)
+    Q, ok = _decode_vectors(pdf["__qv"].to_numpy(), dim)
+    return list(pdf["__qid"]), Q, ok
 
 
 def _matrix_topk(
@@ -186,7 +185,6 @@ def _matrix_topk(
     dim: int,
     cand_masker=None,
     qmat=None,
-    query_block: int | None = None,
 ) -> DataFrame:
     """Matrix-scored top-k: one mapInPandas pass over the corpus, per-query
     per-partition top-k inside the kernel, global rank over the survivors.
@@ -198,17 +196,13 @@ def _matrix_topk(
     _probe_np, exactly the executor kernels' math). The returned
     ``block_fn(q0, q1) -> (n, q1-q0) bool`` is then called per query block,
     so masker temporaries are O(n x QUERY_BLOCK), never O(n x nq).
-    Null/ragged corpus vectors score 0.0 and keep the pair-join paths'
-    bucket-0 membership (the oracles coalesce ragged dots to 0.0 too).
+    Null/ragged corpus vectors score 0.0 and keep bucket/list 0 — the
+    semantics of the pair-join oracles in tests/oracle_similarity.py.
 
     ``qmat``: the (qids, Q, ok) triple from _query_matrix. ANN callers that
     build a masker MUST pass the SAME triple their masker closed over — a
     second collect could return the queries in a different order, silently
     misaligning the masker's bucket rows with the engine's score columns.
-
-    ``query_block``: queries scored per inner block (default QUERY_BLOCK).
-    Purely an executor-memory knob — output is bit-identical at any value
-    (per-row pairwise summation; parity-tested at block=3 vs default).
 
     Scale shape: the corpus crosses Arrow ONCE (no xTables explode, no pair
     rows); per-partition output is <= nq x k rows (+boundary ties), so the
@@ -222,7 +216,7 @@ def _matrix_topk(
         qmat if qmat is not None else _query_matrix(queries, query_id_col, vec_col, dim)
     )
     nq = len(qids)
-    qb = max(1, query_block if query_block is not None else QUERY_BLOCK)
+    qb = max(1, QUERY_BLOCK)
     # Scores and norms use per-row np.add.reduce (numpy's pairwise
     # summation, whose order depends only on dim) instead of GEMM: BLAS
     # picks blocking/SIMD accumulation by MATRIX SHAPE, so a V @ Q.T score
@@ -303,11 +297,7 @@ def _matrix_topk(
             n = len(pdf)
             if n == 0:
                 continue
-            raw = pdf["__v"].to_numpy()
-            ok = np.array([v is not None and len(v) == dim for v in raw], dtype=bool)
-            V = np.zeros((n, dim), dtype=np.float64)
-            if ok.any():
-                V[ok] = np.vstack([np.asarray(v, dtype=np.float64) for v in raw[ok]])
+            V, ok = _decode_vectors(pdf["__v"].to_numpy(), dim)
             ids = pdf[id_col].to_numpy()
             vn = np.sqrt(np.add.reduce(V * V, axis=1))
             # per-batch corpus-side masker prep (signatures / list
@@ -356,7 +346,7 @@ def _matrix_topk(
             rows_c.extend(float(x) for x in c)
         yield pd.DataFrame({query_id_col: rows_q, id_col: rows_i, "cosine": rows_c})
 
-    return _rank_topk(src.mapInPandas(kernel, schema=out_schema), k, id_col, query_id_col)
+    return _rank_topk(src.mapInPandas(kernel, schema=out_schema), k, query_id_col, id_col)
 
 
 def cosine_topk(
@@ -387,24 +377,6 @@ def _infer_dim(queries: DataFrame, vec_col: str) -> int:
     return len(first[0][0])
 
 
-def _cosine_topk_pairjoin(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Pair-join reference implementation (r3 path): broadcast crossJoin +
-    interpreted-HOF cosine. Kept ONLY as the parity oracle for the matrix
-    engine (tests/test_textops.py asserts identical output)."""
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
-    c = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv"))
-    return _score_and_rank(c.crossJoin(F.broadcast(q)), k, id_col, query_id_col)
-
-
 def _hyperplane_component(seed: int, bit: int, j: int) -> float:
     """Deterministic pseudo-random hyperplane component in [-0.5, 0.5).
     Python ``hash`` over an int tuple is process-stable (int hashing is not
@@ -425,26 +397,6 @@ def _hyperplane_matrix(dim: int, nbits: int, tables: int, seed: int):
         for b in range(nbits):
             H[t * nbits + b, :] = [_hyperplane_component(s, b, j) for j in range(dim)]
     return H
-
-
-def _hyperplane(dim: int, bit: int, seed: int):
-    """Expression-path hyperplane (literal array). Kept for lsh_signatures'
-    single-signature API and as the parity oracle for the fused kernel
-    (tests/test_kernels.py); the hot paths use _multi_table_buckets instead."""
-    comps = [F.lit(_hyperplane_component(seed, bit, j)) for j in range(dim)]
-    return F.array(*comps)
-
-
-def lsh_signatures(
-    df: DataFrame, vec_col: str = "embedding", nbits: int = 16, dim: int = 64, seed: int = 42
-) -> DataFrame:
-    """Random-hyperplane LSH signature (int bucket id). sign(v . h_b) per bit."""
-    sig = F.lit(0).cast("long")
-    for bit in range(nbits):
-        h = _hyperplane(dim, bit, seed)
-        d = _dot(F.col(vec_col), h)
-        sig = sig.bitwiseOR(F.when(d >= 0, F.lit(1 << bit).cast("long")).otherwise(F.lit(0).cast("long")))
-    return df.withColumn("lsh_bucket", sig)
 
 
 def _sigs_np(V_ok, H, nbits: int, tables: int):
@@ -476,28 +428,10 @@ def _table_sigs_udf(nbits: int, tables: int, dim: int, seed: int):
     corpora — asserted by tests/test_kernels.py). Null/ragged vectors hash to
     bucket 0 in every table, mirroring the expression path's null semantics.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     H = _hyperplane_matrix(dim, nbits, tables, seed).T  # (dim, tables*nbits)
-
-    def kernel(vecs):
-        n = len(vecs)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        raw = vecs.to_numpy()
-        ok = np.array(
-            [v is not None and len(v) == dim for v in raw], dtype=bool
-        )
-        sigs = np.zeros((n, tables), dtype=np.int64)
-        if ok.any():
-            V = np.vstack([np.asarray(v, dtype=np.float64) for v in raw[ok]])
-            sigs[ok] = _sigs_np(V, H, nbits, tables)
-        return pd.Series(list(sigs))
-
-    kernel.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "array<long>")
+    return _rowwise_udf(
+        lambda X: _sigs_np(X, H, nbits, tables), tables, "int64", dim, "array<long>"
+    )
 
 
 def _multi_table_buckets(
@@ -512,27 +446,6 @@ def _multi_table_buckets(
     return (
         df.withColumn("__sigs", sig_udf(F.col(vec_col)))
         .select(*df.columns, F.posexplode("__sigs").alias("tbl", "bucket"))
-    )
-
-
-def _multi_table_buckets_expr(
-    df: DataFrame, vec_col: str, nbits: int, tables: int, dim: int, seed: int
-) -> DataFrame:
-    """Pure-expression reference implementation (the pre-fusion path): kept
-    ONLY as the parity oracle for _table_sigs_udf — its plan is
-    O(tables*nbits*dim) literal nodes and must not be used at scale."""
-    entries = []
-    for t in range(tables):
-        sig = F.lit(0).cast("long")
-        for bit in range(nbits):
-            h = _hyperplane(dim, bit, seed + 7919 * (t + 1))
-            d = _dot(F.col(vec_col), h)
-            sig = sig.bitwiseOR(
-                F.when(d >= 0, F.lit(1 << bit).cast("long")).otherwise(F.lit(0).cast("long"))
-            )
-        entries.append(F.struct(F.lit(t).alias("tbl"), sig.alias("bucket")))
-    return df.withColumn("__e", F.explode(F.array(*entries))).select(
-        *df.columns, F.col("__e.tbl").alias("tbl"), F.col("__e.bucket").alias("bucket")
     )
 
 
@@ -555,19 +468,17 @@ def lsh_topk(
     signatures + masked scores, and no xTables explode or pair rows ever
     materialize. Recall < 1.0 by design; raise ``tables`` (recall) or
     ``nbits`` (precision/cost), or fall back to cosine_topk for exactness."""
-    import numpy as np
-
     H = _hyperplane_matrix(dim, nbits, tables, seed).T  # (dim, tables*nbits)
+
+    def sig_fn(X):
+        return _sigs_np(X, H, nbits, tables)
+
     qmat = _query_matrix(queries, query_id_col, vec_col, dim)
-    qids, Q, q_ok = qmat
-    qsigs = np.zeros((len(qids), tables), dtype=np.int64)
-    if q_ok.any():
-        qsigs[q_ok] = _sigs_np(Q[q_ok], H, nbits, tables)
+    _, Q, q_ok = qmat
+    qsigs = _fill_valid(sig_fn, Q, q_ok, tables, "int64")
 
     def masker(V, ok):
-        sigs = np.zeros((len(V), tables), dtype=np.int64)
-        if ok.any():
-            sigs[ok] = _sigs_np(V[ok], H, nbits, tables)
+        sigs = _fill_valid(sig_fn, V, ok, tables, "int64")
 
         # candidate iff same bucket in the SAME table, any table; evaluated
         # per query block so the boolean temp is (n, block, tables), never
@@ -581,33 +492,6 @@ def lsh_topk(
         corpus, queries, k, id_col, vec_col, query_id_col, dim,
         cand_masker=masker, qmat=qmat,
     )
-
-
-def _lsh_topk_pairjoin(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    nbits: int = 8,
-    tables: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Pair-join reference implementation (r3 path): xTables bucket explode,
-    broadcast bucket join, interpreted-HOF re-rank. Kept ONLY as the parity
-    oracle for the matrix engine."""
-    c = _multi_table_buckets(
-        corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")),
-        "__cv", nbits, tables, dim, seed,
-    )
-    q = _multi_table_buckets(
-        queries.select(F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")),
-        "__qv", nbits, tables, dim, seed,
-    )
-    joined = c.join(F.broadcast(q), ["tbl", "bucket"]).dropDuplicates([id_col, query_id_col])
-    return _score_and_rank(joined, k, id_col, query_id_col)
 
 
 def _pair_cosine_udf(dim: int):
@@ -624,26 +508,14 @@ def _pair_cosine_udf(dim: int):
     from pyspark.sql.functions import pandas_udf
 
     def kernel(va, vb):
-        n = len(va)
-        out = np.zeros(n, dtype=np.float64)
-        if n == 0:
-            return pd.Series(out)
-        ra, rb = va.to_numpy(), vb.to_numpy()
-        ok = np.array(
-            [
-                a is not None and b is not None and len(a) == dim and len(b) == dim
-                for a, b in zip(ra, rb)
-            ],
-            dtype=bool,
-        )
-        if ok.any():
-            A = np.vstack([np.asarray(a, dtype=np.float64) for a in ra[ok]])
-            B = np.vstack([np.asarray(b, dtype=np.float64) for b in rb[ok]])
-            dots = np.add.reduce(A * B, axis=1)
-            denom = np.sqrt(np.add.reduce(A * A, axis=1)) * np.sqrt(
-                np.add.reduce(B * B, axis=1)
-            )
-            out[ok] = np.where(denom > 0, dots / np.where(denom > 0, denom, 1.0), 0.0)
+        A, ok_a = _decode_vectors(va.to_numpy(), dim)
+        B, ok_b = _decode_vectors(vb.to_numpy(), dim)
+        ok = ok_a & ok_b
+        A, B = A[ok], B[ok]
+        dots = np.add.reduce(A * B, axis=1)
+        denom = np.sqrt(np.add.reduce(A * A, axis=1)) * np.sqrt(np.add.reduce(B * B, axis=1))
+        out = np.zeros(len(ok), dtype=np.float64)
+        out[ok] = np.where(denom > 0, dots / np.where(denom > 0, denom, 1.0), 0.0)
         return pd.Series(out)
 
     kernel.__annotations__ = {"va": pd.Series, "vb": pd.Series, "return": pd.Series}
@@ -774,10 +646,8 @@ def _kmeans_centroids(
         .sort_values(["__h", "__id"], kind="mergesort", ignore_index=True)
         .head(sample_cap)
     )
-    V = np.array(
-        [v for v in pdf["__v"] if v is not None and len(v) == dim],
-        dtype=np.float64,
-    )
+    V, ok = _decode_vectors(pdf["__v"].to_numpy(), dim)
+    V = V[ok]
     if len(V) < nlist:
         raise ValueError(f"IVF needs >= nlist={nlist} sample vectors, got {len(V)}")
     norms = np.linalg.norm(V, axis=1, keepdims=True)
@@ -815,26 +685,10 @@ def _ivf_lists_udf(C, dim: int, nprobe: int):
     centroids ship as ONE broadcast numpy matrix in the closure — the same
     no-literal-plan-tree discipline as _table_sigs_udf). Null/ragged vectors
     go to list 0, mirroring the LSH null semantics."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     CT = C.T.copy()  # (dim, nlist)
-
-    def kernel(vecs):
-        n = len(vecs)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        raw = vecs.to_numpy()
-        ok = np.array([v is not None and len(v) == dim for v in raw], dtype=bool)
-        out = np.zeros((n, nprobe), dtype=np.int32)
-        if ok.any():
-            V = np.vstack([np.asarray(v, dtype=np.float64) for v in raw[ok]])
-            out[ok] = _probe_np(V, CT, nprobe)
-        return pd.Series(list(out))
-
-    kernel.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "array<int>")
+    return _rowwise_udf(
+        lambda X: _probe_np(X, CT, nprobe), nprobe, "int32", dim, "array<int>"
+    )
 
 
 def ivf_topk(
@@ -876,15 +730,11 @@ def ivf_topk(
     )
     CT = np.asarray(C, dtype=np.float64).T.copy()  # (dim, nlist)
     qmat = _query_matrix(queries, query_id_col, vec_col, dim)
-    qids, Q, q_ok = qmat
-    qprobes = np.zeros((len(qids), nprobe), dtype=np.int32)
-    if q_ok.any():
-        qprobes[q_ok] = _probe_np(Q[q_ok], CT, nprobe)
+    _, Q, q_ok = qmat
+    qprobes = _fill_valid(lambda X: _probe_np(X, CT, nprobe), Q, q_ok, nprobe, "int32")
 
     def masker(V, ok):
-        clist = np.zeros(len(V), dtype=np.int32)
-        if ok.any():
-            clist[ok] = _probe_np(V[ok], CT, 1)[:, 0]
+        clist = _fill_valid(lambda X: _probe_np(X, CT, 1), V, ok, 1, "int32")[:, 0]
 
         # candidate iff the row's inverted list is among the query's probes;
         # per-block so the temp is (n, block, nprobe), never (n, nq, nprobe)
@@ -911,34 +761,6 @@ def ivf_topk(
 # ~n x fanout x k candidate rows reach the global per-row rank. This is the
 # semantic-dedup / clustering-prep primitive that threshold pairs
 # (embedding_near_dup_pairs) don't cover.
-
-
-def _knn_rank(cands: DataFrame, k: int, id_col: str, dedup: bool = True) -> DataFrame:
-    """Global top-k per source row over bucket-kernel candidates: the same
-    (cosine desc, neighbor-id asc) tie rule as _rank_topk. A pair
-    co-bucketed in several LSH tables arrives once per co-bucketing, and the
-    copies' GEMM cosines can differ in the last ulp (different member sets
-    => different BLAS shapes), so the dedup is an aggregate — max(cosine)
-    per (id, nbr) — which is deterministic, where dropDuplicates would keep
-    a shuffle-order-lucky copy.
-
-    ``dedup=False`` (r8): the IVF and exact paths produce each (id, nbr)
-    pair EXACTLY once — an IVF member lives in one inverted list and a
-    (member, prober) pair meets in exactly one grid cell; the exact path's
-    matrix engine holds each corpus id in one partition — so the max()
-    aggregate is an identity there and its full extra shuffle + hash-agg
-    over the candidate set (~n x nprobe x k rows) is pure overhead. Only
-    the LSH path (multi-table co-bucketing) keeps it."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
-    if dedup:
-        cands = cands.groupBy(id_col, "nbr_id").agg(F.max("cosine").alias("cosine"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(id_col, "nbr_id", "cosine", "rank")
-    )
 
 
 def _seg_rank(rows):
@@ -1118,23 +940,12 @@ def _knn_score_block(V, Vn, ids, QV, QVn, qids, k: int, prober_block: int = 256)
         rows = np.concatenate(acc_r)
         if not len(rows):
             continue
-        cols = np.concatenate(acc_c)
-        vals = np.concatenate(acc_v)
         # provisional f32 selection: per row keep rank<kk plus everything
         # within the 2*EPS margin of the row's kk-th f32 score — the
-        # provable superset of the f64 top-kk
-        order = np.lexsort((cols, -vals, rows))
-        rows, cols, vals = rows[order], cols[order], vals[order]
-        rank = _seg_rank(rows)
-        kv = np.full(len(rows), -np.inf, dtype=vals.dtype)
-        at_k = rank == kk - 1
-        if at_k.any():
-            run_id = np.cumsum(np.r_[True, rows[1:] != rows[:-1]]) - 1
-            kk_by_run = np.full(run_id[-1] + 1, -np.inf, dtype=vals.dtype)
-            kk_by_run[run_id[at_k]] = vals[at_k]
-            kv = kk_by_run[run_id]
-        keep = (rank < kk) | (vals >= kv - np.float32(2 * EPS_F32))
-        rows, cols = rows[keep], cols[keep]
+        # provable superset of the f64 top-kk (thr is not read again)
+        rows, cols, _ = _topk_compact_margin(
+            rows, np.concatenate(acc_c), np.concatenate(acc_v), kk, thr, 2 * EPS_F32
+        )
         # exact f64 re-score of the survivors: per-row pairwise reduce over
         # the normalized vectors — deterministic and tile-shape independent
         vals64 = np.add.reduce(Qh[b0 + rows] * Vh[cols], axis=1)
@@ -1182,15 +993,31 @@ def knn_join(
 
     Methods:
 
-    - ``ivf`` (DEFAULT — VERDICT r5 #5): data-adaptive lists give far
-      better corpus-KNN recall than data-oblivious hyperplanes at
-      comparable candidate cost (measured on the 16-center clustered
-      fixture: IVF defaults 1.0 recall@10 vs 0.40 for the old lsh
-      nbits=8 default), and the default is what a caller who specifies
-      nothing gets — it must not be the silently-bad configuration.
+    - ``ivf`` (DEFAULT — VERDICT r5 #5): members assigned to their nearest
+      centroid's list, probers exploded to their ``nprobe`` nearest lists,
+      cogrouped per list into ONE applyInArrow kernel — candidates are
+      ~nprobe/nlist of the corpus per row, adapting to data clustering like
+      ivf_topk. Data-adaptive lists give far better corpus-KNN recall than
+      data-oblivious hyperplanes at comparable candidate cost (measured on
+      the 16-center clustered fixture: IVF defaults 1.0 recall@10 vs 0.40
+      for the old lsh nbits=8 default), and the default is what a caller
+      who specifies nothing gets — it must not be the silently-bad
+      configuration. nprobe == nlist makes candidates exhaustive (the
+      provable-recall contract configuration). Hot lists are NOT dropped
+      (an IVF member lives in exactly ONE inverted list, so the LSH drop
+      rule would silently remove it as a candidate everywhere): lists over
+      ``max_bucket`` members or ``max_probers`` probers are grid-split
+      instead — members salted into ceil(mc/max_bucket) blocks by id hash,
+      probers into ceil(pc/max_probers) blocks by id hash, each side
+      replicated across the OTHER side's blocks, cogrouped on (list,
+      mblock, pblock). Every (member, prober) pair lands in exactly one
+      cell, per-cell memory is bounded, and the union of per-cell top-ks
+      contains the true top-k — the standard blocked-matmul distribution,
+      at the cost of members x p_blocks + probers x m_blocks row
+      replication on the hot lists only.
     - ``lsh``: multi-table hyperplane buckets
       (_table_sigs_udf — the s2/s3 math); ONE groupBy(table, bucket) +
-      applyInPandas kernel scores each bucket's members against each other
+      applyInArrow kernel scores each bucket's members against each other
       and keeps per-member top-k in-kernel; global rank merges the <= n x
       tables x k candidates. Never all-pairs; recall < 1.0 by design.
       Corpus-KNN needs COARSE buckets — every row is a query, so a row
@@ -1202,29 +1029,12 @@ def knn_join(
       the kernel (the O(m^2 x dim) guard — members still pair via their
       other tables); the kernel is O(m^2 x dim) per bucket, ~1 s at the
       4096 default with dim 64.
-    - ``ivf``: members assigned to their nearest centroid's list, probers
-      exploded to their ``nprobe`` nearest lists, cogrouped per list —
-      candidates are ~nprobe/nlist of the corpus per row, adapting to data
-      clustering like ivf_topk. nprobe == nlist makes candidates exhaustive
-      (the provable-recall contract configuration). Hot lists are NOT
-      dropped (an IVF member lives in exactly ONE inverted list, so the
-      LSH drop rule would silently remove it as a candidate everywhere):
-      lists over ``max_bucket`` members or ``max_probers`` probers are
-      grid-split instead — members salted into ceil(mc/max_bucket) blocks
-      by id hash, probers into ceil(pc/max_probers) blocks by id hash,
-      each side replicated across the OTHER side's blocks, cogrouped on
-      (list, mblock, pblock). Every (member, prober) pair lands in exactly
-      one cell, per-cell memory is bounded, and the union of per-cell
-      top-ks contains the true top-k — the standard blocked-matmul
-      distribution, at the cost of members x p_blocks + probers x
-      m_blocks row replication on the hot lists only.
     - ``exact``: the matrix engine with queries := the corpus (k+1 then
       self-drop + re-rank). O(n^2 x dim) compute and an O(n x dim) driver
       collect — the small/mid-corpus baseline and the parity oracle for the
       bucketed paths; hard-capped by MAX_ENGINE_QUERIES.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     if method not in ("lsh", "ivf", "exact"):
@@ -1257,7 +1067,7 @@ def knn_join(
         ).withColumnRenamed("__q", id_col)
         # each corpus id lives in one partition of the matrix engine's pass,
         # so (query, id) candidates are already unique — no dedup aggregate
-        return _knn_rank(cands, k, id_col, dedup=False)
+        return _rank_topk(cands, k, id_col, "nbr_id")
 
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
@@ -1268,13 +1078,15 @@ def knn_join(
         ]
     )
 
+    import pyarrow as pa
+
     def _prep_arrow(tab, idc: str, vc: str):
         """Arrow table -> (ids, V, Vn), id-sorted. The vector column is a
         list<double> whose flat values buffer converts to numpy ZERO-COPY
-        and reshapes to (n, dim) — no per-row object arrays, the reason the
-        ivf cogroup runs applyInArrow instead of applyInPandas (r8: the
+        and reshapes to (n, dim) — no per-row object arrays, the reason both
+        grouped kernels run applyInArrow instead of applyInPandas (r8: the
         pandas group conversion of n x nprobe vector rows cost ~1/3 of the
-        whole stage). Rows are pre-validated upstream (non-null, len==dim),
+        ivf stage). Rows are pre-validated upstream (non-null, len==dim),
         so flatten() is exactly n*dim values in row order."""
         ids = tab.column(idc).to_numpy(zero_copy_only=False)
         col = tab.column(vc)
@@ -1287,16 +1099,14 @@ def knn_join(
         Vn = np.sqrt(np.add.reduce(V * V, axis=1))
         return ids, V, Vn
 
-    def _prep(pdf: pd.DataFrame, idc: str = id_col, vc: str = "__v"):
-        pdf = pdf.sort_values(idc, kind="mergesort", ignore_index=True)
-        # rows arrive as float64 ndarrays from Arrow (cast upstream); vstack
-        # them directly — the per-element asarray() wrapper doubled the
-        # conversion cost on 50k+-row groups for a dtype that is already right
-        V = np.vstack(pdf[vc].to_numpy())
-        if V.dtype != np.float64:
-            V = V.astype(np.float64)
-        Vn = np.sqrt(np.add.reduce(V * V, axis=1))
-        return pdf[idc].to_numpy(), V, Vn
+    def _cands_table(it, oq, oi, oc) -> "pa.Table":
+        return pa.table(
+            {
+                id_col: pa.array(oq, type=it),
+                "nbr_id": pa.array(oi, type=it),
+                "cosine": pa.array(np.asarray(oc, dtype=np.float64), type=pa.float64()),
+            }
+        )
 
     if method == "lsh":
         assigned = _multi_table_buckets(valid, "__v", nbits, tables, dim, seed)
@@ -1305,18 +1115,18 @@ def knn_join(
 
             assigned = _drop_hot_buckets(assigned, ["tbl", "bucket"], max_bucket)
 
-        def bucket_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) < 2:
-                return pd.DataFrame({id_col: [], "nbr_id": [], "cosine": []})
-            ids, V, Vn = _prep(pdf)
-            oq, oi, oc = _knn_score_block(V, Vn, ids, V, Vn, ids, k)
-            return pd.DataFrame({id_col: oq, "nbr_id": oi, "cosine": oc})
+        def bucket_kernel(tab: "pa.Table") -> "pa.Table":
+            it = tab.schema.field(id_col).type
+            if tab.num_rows < 2:
+                return _cands_table(it, [], [], [])
+            ids, V, Vn = _prep_arrow(tab, id_col, "__v")
+            return _cands_table(it, *_knn_score_block(V, Vn, ids, V, Vn, ids, k))
 
         cands = (
             assigned.groupBy("tbl", "bucket")
-            .applyInPandas(bucket_kernel, schema=out_schema)
+            .applyInArrow(bucket_kernel, schema=out_schema)
         )
-        return _knn_rank(cands, k, id_col)
+        return _rank_topk(cands, k, id_col, "nbr_id", dedup=True)
 
     # ivf
     if not 1 <= nprobe <= nlist:
@@ -1337,7 +1147,6 @@ def knn_join(
         F.col("__v").alias("__qv"),
         F.explode(_ivf_lists_udf(C, dim, nprobe)(F.col("__v"))).alias("__qlist"),
     )
-    import pyarrow as pa
 
     def list_kernel(mtab: "pa.Table", ptab: "pa.Table") -> "pa.Table":
         it = (
@@ -1346,23 +1155,10 @@ def knn_join(
             else ptab.schema.field("__qid").type
         )
         if mtab.num_rows == 0 or ptab.num_rows == 0:
-            return pa.table(
-                {
-                    id_col: pa.array([], type=it),
-                    "nbr_id": pa.array([], type=it),
-                    "cosine": pa.array([], type=pa.float64()),
-                }
-            )
+            return _cands_table(it, [], [], [])
         ids, V, Vn = _prep_arrow(mtab, id_col, "__v")
         qids, QV, QVn = _prep_arrow(ptab, "__qid", "__qv")
-        oq, oi, oc = _knn_score_block(V, Vn, ids, QV, QVn, qids, k)
-        return pa.table(
-            {
-                id_col: pa.array(oq, type=it),
-                "nbr_id": pa.array(oi, type=it),
-                "cosine": pa.array(np.asarray(oc, dtype=np.float64), type=pa.float64()),
-            }
-        )
+        return _cands_table(it, *_knn_score_block(V, Vn, ids, QV, QVn, qids, k))
 
     splits, n_cells = _ivf_grid_splits(valid, C, dim, nprobe, max_bucket, max_probers)
     # Pre-partition both cogroup sides over ~4x the cell count (r8): the
@@ -1425,7 +1221,7 @@ def knn_join(
     # IVF candidates are exactly-once by construction (one inverted list per
     # member; one grid cell per (member, prober) pair) — skip the dedup
     # aggregate's full extra shuffle over ~n x nprobe x k candidate rows
-    return _knn_rank(cands, k, id_col, dedup=False)
+    return _rank_topk(cands, k, id_col, "nbr_id")
 
 
 def _ivf_grid_splits(
@@ -1489,60 +1285,3 @@ def _ivf_grid_splits(
         valid.sparkSession.createDataFrame(data, "__l int, __ms int, __ps int"),
         n_cells,
     )
-
-
-def _knn_join_pairjoin(
-    df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Brute-force pair-join reference for knn_join: self crossJoin of the
-    valid rows, HOF cosine, windowed rank. All-pairs by construction — kept
-    ONLY as the small-scale parity oracle (same discipline as the other
-    _*_pairjoin paths)."""
-    if dim is None:
-        dim = _infer_dim(df, vec_col)
-    base = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-    valid = base.where(F.col("__v").isNotNull() & (F.size("__v") == dim))
-    a = valid.select(F.col(id_col), F.col("__v").alias("__cv"))
-    b = valid.select(F.col(id_col).alias("nbr_id"), F.col("__v").alias("__qv"))
-    joined = a.crossJoin(b).where(F.col(id_col) != F.col("nbr_id"))
-    out = _score_and_rank(joined, k, "nbr_id", id_col)
-    return out.select(id_col, "nbr_id", "cosine", "rank")
-
-
-def _ivf_topk_pairjoin(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    nlist: int = 16,
-    nprobe: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    centroids=None,
-) -> DataFrame:
-    """Pair-join reference implementation (r3 path): list-id equi-join with
-    the exploded query probes, interpreted-HOF re-rank. Kept ONLY as the
-    parity oracle for the matrix engine."""
-    if not 1 <= nprobe <= nlist:
-        raise ValueError(f"nprobe must be in [1, nlist={nlist}], got {nprobe}")
-    c_base = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv"))
-    C = (
-        centroids
-        if centroids is not None
-        else _kmeans_centroids(corpus, vec_col, id_col, nlist, dim, seed)
-    )
-    c = c_base.withColumn(
-        "list_id", F.element_at(_ivf_lists_udf(C, dim, 1)(F.col("__cv")), 1)
-    )
-    q = (
-        queries.select(F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv"))
-        .withColumn("list_id", F.explode(_ivf_lists_udf(C, dim, nprobe)(F.col("__qv"))))
-    )
-    joined = c.join(F.broadcast(q), "list_id").dropDuplicates([id_col, query_id_col])
-    return _score_and_rank(joined, k, id_col, query_id_col)

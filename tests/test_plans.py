@@ -86,13 +86,8 @@ def test_ann_plans_have_no_rowwise_python(spark):
     (ArrowEvalPython assignment kernels + broadcast query join)."""
     import numpy as np
 
-    from pitfeat.ops.similarity import (
-        _ivf_topk_pairjoin,
-        _lsh_topk_pairjoin,
-        cosine_topk,
-        ivf_topk,
-        lsh_topk,
-    )
+    from pitfeat.ops.similarity import cosine_topk, ivf_topk, lsh_topk
+    from tests.oracle_similarity import _ivf_topk_pairjoin, _lsh_topk_pairjoin
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = e.where(F.col("vec_id") < 3).select(
@@ -120,7 +115,7 @@ def test_ann_plans_have_no_rowwise_python(spark):
 
 def test_knn_join_plans_never_materialize_pairs(spark):
     """knn_join's bucketed paths (VERDICT r4 #3) must score inside grouped
-    Arrow kernels — FlatMapGroupsInPandas (lsh) / FlatMapCoGroupsInPandas
+    Arrow kernels — FlatMapGroupsInArrow (lsh) / FlatMapCoGroupsInArrow
     (ivf) — with NO cartesian/nested-loop join and no row-wise Python
     anywhere: pair rows exist only as the <= n x fanout x k kernel OUTPUT,
     never as a join product."""
@@ -136,9 +131,10 @@ def test_knn_join_plans_never_materialize_pairs(spark):
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "BatchEvalPython" not in plan
-    assert "FlatMapGroupsInPandas" in lsh_plan
-    # r8: the ivf cogroup kernel is Arrow-native (applyInArrow) — vectors
-    # reach numpy as one flat-buffer reshape instead of per-row objects
+    # both grouped kernels are Arrow-native (applyInArrow) — vectors reach
+    # numpy as one flat-buffer reshape instead of per-row objects
+    assert "FlatMapGroupsInArrow" in lsh_plan
+    assert "FlatMapGroupsInPandas" not in lsh_plan
     assert "FlatMapCoGroupsInArrow" in ivf_plan
 
 

@@ -9,6 +9,12 @@ from pitfeat.ops import dedup as D
 from pitfeat.ops import similarity as S
 from pitfeat.ops import text as X
 from pitfeat.ops.multimodal import decode_features, gen_media
+from tests.oracle_similarity import (
+    _cosine_topk_pairjoin,
+    _ivf_topk_pairjoin,
+    _knn_join_pairjoin,
+    _lsh_topk_pairjoin,
+)
 
 
 @pytest.fixture(scope="module")
@@ -131,14 +137,14 @@ def test_quality_score_kernel_matches_expression_path(spark, docs):
         pd.testing.assert_series_equal(got[c], ref[c], check_exact=True)
 
 
-def test_lang_id_kernel_matches_expression_path(spark, docs):
-    """r8: lang_id's four marker-hit counts moved to a fused Arrow kernel;
-    this pins EXACT parity against the original pure-expression
-    formulation (the four interpreted HOF filters, replicated inline) on
-    the corpus plus planted edge shapes: null text, empty,
-    whitespace-only, padded, per-language marker runs, a cross-language
-    TIE (must resolve by the same first-lang-wins when-chain), and a
-    no-marker doc ('und')."""
+def test_lang_id_expression_path_semantics(spark, docs):
+    """lang_id runs on Catalyst expressions (a fused Arrow kernel was tried
+    in r8, measured slower and reverted). This pins its semantics EXACTLY
+    against an inline copy of the pure-expression formulation (the four
+    interpreted HOF marker filters) on the corpus plus planted edge shapes:
+    null text, empty, whitespace-only, padded, per-language marker runs, a
+    cross-language TIE (must resolve by the first-lang-wins when-chain),
+    and a no-marker doc ('und'), so any future rewrite must keep them."""
     edges = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -979,17 +985,17 @@ def test_matrix_engine_parity_with_pairjoin(spark, embs):
         )
 
     assert norm(SIM.cosine_topk(embs, qs, k=5)) == norm(
-        SIM._cosine_topk_pairjoin(embs, qs, k=5)
+        _cosine_topk_pairjoin(embs, qs, k=5)
     )
     assert norm(SIM.lsh_topk(embs, qs, k=5, nbits=1, tables=16)) == norm(
-        SIM._lsh_topk_pairjoin(embs, qs, k=5, nbits=1, tables=16)
+        _lsh_topk_pairjoin(embs, qs, k=5, nbits=1, tables=16)
     )
     C = SIM._kmeans_centroids(embs, "embedding", "vec_id", nlist=8, dim=64, seed=42)
     for nprobe in (2, 8):
         assert norm(
             SIM.ivf_topk(embs, qs, k=5, nlist=8, nprobe=nprobe, centroids=C)
         ) == norm(
-            SIM._ivf_topk_pairjoin(embs, qs, k=5, nlist=8, nprobe=nprobe, centroids=C)
+            _ivf_topk_pairjoin(embs, qs, k=5, nlist=8, nprobe=nprobe, centroids=C)
         )
 
 
@@ -1018,7 +1024,7 @@ def test_matrix_engine_edge_semantics(spark):
         )
 
     got = norm(SIM.cosine_topk(corpus, qs, k=23, dim=8))
-    oracle = norm(SIM._cosine_topk_pairjoin(corpus, qs, k=23))
+    oracle = norm(_cosine_topk_pairjoin(corpus, qs, k=23))
     assert got == oracle
     # duplicate pair: identical cosine, id-asc order
     q0 = [(vid, rank) for (q, vid, c, rank) in got if q == 0 and c == round(1.0, 9)]
@@ -1031,13 +1037,13 @@ def test_matrix_engine_edge_semantics(spark):
     assert got7 == got
 
     assert norm(SIM.lsh_topk(corpus, qs, k=23, nbits=2, tables=4, dim=8)) == norm(
-        SIM._lsh_topk_pairjoin(corpus, qs, k=23, nbits=2, tables=4, dim=8)
+        _lsh_topk_pairjoin(corpus, qs, k=23, nbits=2, tables=4, dim=8)
     )
     C = np.eye(4, 8)
     assert norm(
         SIM.ivf_topk(corpus, qs, k=23, nlist=4, nprobe=2, dim=8, centroids=C)
     ) == norm(
-        SIM._ivf_topk_pairjoin(corpus, qs, k=23, nlist=4, nprobe=2, dim=8, centroids=C)
+        _ivf_topk_pairjoin(corpus, qs, k=23, nlist=4, nprobe=2, dim=8, centroids=C)
     )
 
 
@@ -1069,12 +1075,12 @@ def test_matrix_engine_randomized_parity_sweep(spark):
         )
         for k in (1, 5, n + 10):
             assert norm(SIM.cosine_topk(corpus, qs, k=k, dim=dim)) == norm(
-                SIM._cosine_topk_pairjoin(corpus, qs, k=k)
+                _cosine_topk_pairjoin(corpus, qs, k=k)
             ), (seed, "cosine", k)
             assert norm(
                 SIM.lsh_topk(corpus, qs, k=k, nbits=2, tables=3, dim=dim, seed=seed)
             ) == norm(
-                SIM._lsh_topk_pairjoin(
+                _lsh_topk_pairjoin(
                     corpus, qs, k=k, nbits=2, tables=3, dim=dim, seed=seed
                 )
             ), (seed, "lsh", k)
@@ -1083,7 +1089,7 @@ def test_matrix_engine_randomized_parity_sweep(spark):
                     corpus, qs, k=k, nlist=4, nprobe=2, dim=dim, centroids=C
                 )
             ) == norm(
-                SIM._ivf_topk_pairjoin(
+                _ivf_topk_pairjoin(
                     corpus, qs, k=k, nlist=4, nprobe=2, dim=dim, centroids=C
                 )
             ), (seed, "ivf", k)
@@ -1110,7 +1116,7 @@ def test_matrix_engine_degenerate_tie_flood(spark):
         )
 
     got = norm(SIM.cosine_topk(corpus.repartition(3), qs, k=10, dim=8))
-    oracle = norm(SIM._cosine_topk_pairjoin(corpus, qs, k=10))
+    oracle = norm(_cosine_topk_pairjoin(corpus, qs, k=10))
     assert got == oracle
     assert [vid for (_, vid, _, _) in got] == list(range(10))  # pure id-asc
 
@@ -1137,7 +1143,7 @@ def test_matrix_engine_string_ids(spark):
         )
 
     got = norm(SIM.cosine_topk(corpus, qs, k=5, dim=8))
-    assert got == norm(SIM._cosine_topk_pairjoin(corpus, qs, k=5))
+    assert got == norm(_cosine_topk_pairjoin(corpus, qs, k=5))
     top2 = [vid for (_, vid, _, rank) in got if rank <= 2]
     assert top2 == ["doc-005", "doc-900"]  # cosine tie -> id asc
 
@@ -1169,7 +1175,7 @@ def test_knn_join_exact_parity_and_semantics(spark):
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     got = _knn_norm(SIM.knn_join(corpus, k=5, method="exact", dim=8))
-    oracle = _knn_norm(SIM._knn_join_pairjoin(corpus, k=5, dim=8))
+    oracle = _knn_norm(_knn_join_pairjoin(corpus, k=5, dim=8))
     assert got == oracle
     ids_out = {q for (q, _, _, _) in got} | {n for (_, n, _, _) in got}
     assert 101 not in ids_out and 102 not in ids_out
@@ -1372,7 +1378,7 @@ def test_matrix_engine_ragged_vector_parity(spark):
         )
 
     got = norm(SIM.cosine_topk(corpus, qs, k=4, dim=4))
-    oracle = norm(SIM._cosine_topk_pairjoin(corpus, qs, k=4))
+    oracle = norm(_cosine_topk_pairjoin(corpus, qs, k=4))
     assert got == oracle
     by_rank = {rank: (vid, c) for (_, vid, c, rank) in got}
     assert by_rank[1] == (0, 1.0)
