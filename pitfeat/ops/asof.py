@@ -9,9 +9,10 @@ never be selected (property-tested in tests/test_asof.py).
 Three physical strategies, all vectorized (no per-row Python anywhere):
 
 ``window`` (DEFAULT — matches the ``strategy`` parameter default below)
-    Pure-JVM union-tag forward-fill: tag both sides, union, forward-fill the
-    right value struct down a (key, ts, tag)-sorted window with
-    ``last(ignorenulls)``. Zero JVM<->Python transfer; measured ~10-30x
+    Pure-JVM union-tag fill: tag both sides, union, fill the right value
+    struct along a (key, ts, tag)-sorted window with ``last(ignorenulls)``
+    (preceding match) and/or ``first(ignorenulls)`` (following match). Zero
+    JVM<->Python transfer; measured ~10-30x
     faster than the Python-kernel strategies. Spill-backed window sort, so
     memory is bounded regardless of key heat.
 
@@ -46,13 +47,16 @@ Strategy x direction support matrix (ValueError outside it):
     cogroup    yes       yes      yes
     =========  ========  =======  =======
 
-    (merge/forward and window/forward: descending-ts variants of the same
-    fills; window/nearest: one sorted pass computing both the preceding and
-    following snapshot via doubled-tagged right rows, closer one chosen
-    row-locally — see _asof_window_nearest; merge/nearest (r6, the last
-    matrix hole): the backward pass's output rides as left payload through
-    the forward pass — two bounded-memory sorted streams, then the same
-    row-local closer-one choice — see _asof_merge_nearest.)
+    (window: ONE sorted pass serves every direction — the right side
+    enters the union once per frame the direction needs, a "prev" copy
+    filled by ``last(ignorenulls)`` and a "next" copy filled by
+    ``first(ignorenulls)``, and nearest picks the closer of the two
+    row-locally; forward alone sorts descending and fills its copy by a
+    running ``last(ignorenulls)`` — see _asof_window; merge/forward: a
+    descending-ts variant of the backward fill; merge/nearest (r6): the
+    backward pass's output rides as left payload through the forward pass
+    — two bounded-memory sorted streams, then the same row-local
+    closer-one choice — see _asof_merge_nearest.)
 
 Tie rule: with ``allow_exact=True`` an equal-timestamp snapshot matches
 (searchsorted ``side='right'``; merge sorts right-before-left at equal ts).
@@ -154,7 +158,7 @@ def asof_join(
       zipf fixture because the right side replicates xB for all keys).
     - ``hot_threshold``: with ``salt_buckets``, engages TARGETED salting —
       a one-pass key-frequency sketch picks keys at/above the threshold,
-      only those take the salted path (window strategy). Set it to the
+      only those take the salted path (window and cogroup). Set it to the
       rows-per-key size above which one task's sort becomes the straggler
       (PitfeatConfig.hot_key_threshold wires 5M).
     """
@@ -171,23 +175,6 @@ def asof_join(
     # back with null right columns — the null-key window partition and the
     # null pandas groupby key both find an empty right side after this).
     right = right.where(F.col(on).isNotNull() & F.col(right_ts).isNotNull())
-    if strategy == "window":
-        impl = _asof_window_nearest if direction == "nearest" else _asof_window
-        if salt_buckets > 0 and hot_threshold:
-            lh, lc, rh, rc = _split_hot_keys(left, right, on, hot_threshold)
-            cold = impl(
-                lc, rc, on, left_ts, right_ts, allow_exact, tolerance_s, 0,
-                direction=direction,
-            )
-            hot = impl(
-                lh, rh, on, left_ts, right_ts, allow_exact, tolerance_s, salt_buckets,
-                direction=direction,
-            )
-            return cold.unionByName(hot)
-        return impl(
-            left, right, on, left_ts, right_ts, allow_exact, tolerance_s, salt_buckets,
-            direction=direction,
-        )
     if strategy == "merge":
         # no salting path needed: merge's memory is bounded by the Arrow
         # batch size regardless of key heat (see module docstring)
@@ -198,25 +185,23 @@ def asof_join(
         return _asof_merge(
             left, right, on, left_ts, right_ts, allow_exact, tolerance_s, direction
         )
-    if strategy != "cogroup":
+    impl = {"window": _asof_window, "cogroup": _asof_cogroup}.get(strategy)
+    if impl is None:
         raise ValueError(f"unknown strategy {strategy!r}")
+
+    def run(lf: DataFrame, rf: DataFrame, buckets: int) -> DataFrame:
+        return impl(
+            lf, rf, on, left_ts, right_ts, allow_exact, tolerance_s, direction, buckets
+        )
+
     if salt_buckets > 0 and hot_threshold:
-        # targeted salting for the cogroup strategy (same sketch+split as the
-        # window path): blanket salting replicates the right side xB for every
-        # key — measured 5x slower than unsalted on a 30%-hot zipf fixture —
-        # while an unsplit hot key is exactly cogroup's memory hazard (one
-        # group = one in-worker pandas frame)
+        # targeted salting (window and cogroup alike): blanket salting
+        # replicates the right side xB for every key — measured 5x slower
+        # than unsalted on a 30%-hot zipf fixture — while an unsplit hot key
+        # is one task's sort (window) or one in-worker pandas frame (cogroup)
         lh, lc, rh, rc = _split_hot_keys(left, right, on, hot_threshold)
-        cold = _asof_cogroup(
-            lc, rc, on, left_ts, right_ts, allow_exact, tolerance_s, direction, 0
-        )
-        hot = _asof_cogroup(
-            lh, rh, on, left_ts, right_ts, allow_exact, tolerance_s, direction, salt_buckets
-        )
-        return cold.unionByName(hot)
-    return _asof_cogroup(
-        left, right, on, left_ts, right_ts, allow_exact, tolerance_s, direction, salt_buckets
-    )
+        return run(lc, rc, 0).unionByName(run(lh, rh, salt_buckets))
+    return run(left, right, salt_buckets)
 
 
 def _split_hot_keys(left: DataFrame, right: DataFrame, on: str, hot_threshold: int):
@@ -236,27 +221,39 @@ def _split_hot_keys(left: DataFrame, right: DataFrame, on: str, hot_threshold: i
     return lh, lc, rh, rc
 
 
+def _salt(lt: DataFrame, rt: DataFrame, on: str, ts: str, b: int):
+    """J2 salting, shared by the window and cogroup strategies: left rows
+    spread over ``b`` salts by ``pmod(xxhash64(key, ts), b)`` and every right
+    row is replicated into all ``b`` — one hot key becomes ``b`` independent
+    groups, each still seeing the key's whole right side."""
+    lt = lt.withColumn("__salt", F.pmod(F.xxhash64(F.col(on), F.col(ts)), F.lit(b)).cast("int"))
+    rt = rt.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(b)])))
+    return lt, rt
+
+
+def _prefer_preceding(have_p, have_n, dp, dn):
+    """nearest's choice between the preceding (distance ``dp``) and the
+    following (``dn``) candidate: the preceding one unless the following one
+    is strictly closer — equidistant resolves to preceding (pandas' rule)."""
+    return have_p & (~have_n | (dp <= dn))
+
+
 # --------------------------------------------------------------------------
-# strategy (c, DEFAULT): pure-JVM union-tag window forward-fill
+# strategy (c, DEFAULT): pure-JVM union-tag window fill
 # --------------------------------------------------------------------------
 #
-# Tag both sides, union, and forward-fill the right-side value columns down a
-# (key, ts, tag)-sorted window with last(..., ignorenulls) — the
-# "range-partitioned, sort-within-partition as-of merge" realized entirely in
-# Tungsten: one Exchange + one Sort + one whole-stage-codegen'd Window, zero
-# JVM<->Python Arrow transfer. Measured ~10-30x faster than the Python-kernel
-# strategies at 2.8M rows because the full table never crosses the Python
-# boundary; the window executor streams sorted rows with spill, so memory is
-# bounded regardless of key heat.
+# Tag both sides, union, and fill the right-side value struct along a
+# (key, ts, tag)-sorted window — the sort-within-partition as-of merge
+# realized entirely in Tungsten: one hash Exchange + one Sort + one
+# whole-stage-codegen'd Window, zero JVM<->Python Arrow transfer. Measured
+# ~10-30x faster than the Python-kernel strategies at 2.8M rows because the
+# full table never crosses the Python boundary; the window executor streams
+# sorted rows with spill, so memory is bounded regardless of key heat.
+# Time is linear per key for backward and forward (running frames only);
+# nearest's following frame is re-evaluated per row, quadratic in one
+# key's rows, so a hot key takes nearest through merge or salting.
 #
-# Tie rule via the tag's sort position at equal ts: allow_exact sorts right
-# rows BEFORE left rows (tag 0 < 1) so an equal-timestamp snapshot is visible;
-# strict sorts them after. If multiple right rows share (key, right_ts), the
-# last one in sort order wins — matching merge_asof, which also keeps the
-# final duplicate.
-#
-# Salting (J2) composes: left rows get pmod(xxhash64(key, ts), B), the right
-# side is replicated xB, and the window partitions on (key, salt) — a hot key
+# Salting (J2) composes: the window partitions on (key, salt), so a hot key
 # becomes B independent sorted streams.
 
 
@@ -268,225 +265,120 @@ def _asof_window(
     right_ts: str,
     allow_exact: bool,
     tolerance_s: float | None,
-    salt_buckets: int = 0,
-    direction: str = "backward",
+    direction: str,
+    salt_buckets: int,
 ) -> DataFrame:
-    """``forward`` (r5) is the same pure-Tungsten fill over a DESCENDING ts
-    window (desc_nulls_first — NULL-ts left rows must sort before any right
-    row so the fill finds nothing for them, exactly the merge strategy's
-    rule): "last right struct seen down the stream" then means "earliest
-    right row at/after this left timestamp". Tags and the greatest-tuple
-    duplicate rule carry over unchanged; only the staleness sign flips."""
+    """One sorted window pass for all three directions.
+
+    The right side enters the union once per frame the direction needs: a
+    "prev" copy (backward, nearest) carrying its row as the ``__rv`` struct,
+    filled by ``last(ignorenulls)`` over (unboundedPreceding, 0), and a
+    "next" copy (forward, nearest) carrying it as ``__nv``, filled by
+    ``first(ignorenulls)`` over (0, unboundedFollowing). Tags
+    ``(prev, left, next)`` are (0, 1, 2) with ``allow_exact`` — equal-ts
+    rights sit on the visible side of the left row in both frames — and
+    (2, 1, 0) without it, where they are visible to neither. Each struct is
+    also the trailing sort key, ascending for prev copies and descending
+    (nulls last) for next copies, so right rows tied on (key, ts) resolve to
+    the greatest value tuple in both frames. Staleness nulls each candidate
+    before nearest's row-local choice (``_prefer_preceding``) — equivalent
+    to pandas' nearest+tolerance, since the nearest valid candidate always
+    has the smaller distance.
+
+    Forward alone runs the mirror image of that order (ts descending with
+    NULL-ts rows first, tags descending, the struct ascending) and fills
+    ``__nv`` with ``last(ignorenulls)`` over the running frame: Spark
+    evaluates a running frame in one pass per partition, but recomputes an
+    (0, unboundedFollowing) frame for every row — quadratic in the rows of
+    one key. Nearest needs both frames under one order and keeps it."""
     from pyspark.sql import Window
 
     out_schema = _result_schema(left, right, on, right_ts)
     typ = {f.name: f.dataType for f in out_schema.fields}
-    left_cols = [f.name for f in left.schema.fields]
     right_val_cols = [f.name for f in right.schema.fields if f.name != on]
-    pass_left = [c for c in left_cols if c not in (on, left_ts)]
-    right_tag, left_tag = (0, 1) if allow_exact else (1, 0)
+    pass_left = [f.name for f in left.schema.fields if f.name not in (on, left_ts)]
+    prev_tag, left_tag, next_tag = (0, 1, 2) if allow_exact else (2, 1, 0)
+    frames = {
+        "backward": {"__rv": prev_tag},
+        "forward": {"__nv": next_tag},
+        "nearest": {"__rv": prev_tag, "__nv": next_tag},
+    }[direction]
 
-    # The snapshot row is forward-filled as ONE struct, not column-by-column:
+    # The snapshot row is filled as ONE struct, not column-by-column:
     # per-column last(ignorenulls) would resurrect an older snapshot's value
     # through a newer snapshot's legitimate NULL. The struct is non-null
     # exactly when a right row exists, so the whole row carries atomically.
     rv_type = T.StructType([T.StructField(c, typ[c], True) for c in right_val_cols])
+    null_rv = F.lit(None).cast(rv_type)
     lt = left.select(
         F.col(on),
         F.col(left_ts).alias("__t"),
         F.lit(left_tag).alias("__tag"),
         *[F.col(c) for c in pass_left],
-        F.lit(None).cast(rv_type).alias("__rv"),
+        *[null_rv.alias(f) for f in frames],
     )
-    rt = right.select(
-        F.col(on),
-        F.col(right_ts).alias("__t"),
-        F.lit(right_tag).alias("__tag"),
-        *[F.lit(None).cast(typ[c]).alias(c) for c in pass_left],
-        F.struct(*[F.col(c) for c in right_val_cols]).alias("__rv"),
-    )
+    rt = None
+    for frame, tag in frames.items():
+        copy = right.select(
+            F.col(on),
+            F.col(right_ts).alias("__t"),
+            F.lit(tag).alias("__tag"),
+            *[F.lit(None).cast(typ[c]).alias(c) for c in pass_left],
+            *[(F.struct(*right_val_cols) if f == frame else null_rv).alias(f) for f in frames],
+        )
+        rt = copy if rt is None else rt.unionByName(copy)
     keys = [on]
     if salt_buckets > 0:
-        b = salt_buckets
-        lt = lt.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(on), F.col("__t")), F.lit(b)).cast("int")
-        )
-        rt = (
-            rt.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(b)])))
-            .withColumn("__salt", F.col("__salt").cast("int"))
-        )
+        lt, rt = _salt(lt, rt, on, "__t", salt_buckets)
         keys = [on, "__salt"]
-    cols_order = keys + ["__t", "__tag"] + pass_left + ["__rv"]
+    cols_order = keys + ["__t", "__tag"] + pass_left + list(frames)
     unioned = lt.select(*cols_order).unionByName(rt.select(*cols_order))
 
-    # __rv as the final sort key: right rows tied on (key, ts) order by their
-    # value struct (Spark structs are orderable), so last(ignorenulls) picks
-    # the greatest value tuple — deterministic, and free (no extra shuffle).
-    # If any value column is unorderable (maps), sort by the orderable subset
-    # instead of failing the whole join (_orderable docstring).
+    # If any value column is unorderable (maps), the trailing key is the
+    # orderable subset instead of failing the whole join (_orderable).
     ord_cols = [c for c in right_val_cols if _orderable(typ[c])]
-    rv_sort = (
-        F.col("__rv")
-        if ord_cols == right_val_cols
-        else F.struct(*[F.col("__rv")[c] for c in ord_cols])
-    )
-    ts_sort = (
-        F.col("__t").asc() if direction == "backward" else F.col("__t").desc_nulls_first()
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts_sort, F.col("__tag").asc(), rv_sort.asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+
+    def by_value(f: str):
+        if ord_cols == right_val_cols:
+            return F.col(f)
+        return F.struct(*[F.col(f)[c] for c in ord_cols])
+
+    if direction == "forward":
+        order = [F.col("__t").desc_nulls_first(), F.col("__tag").desc(), by_value("__nv").asc()]
+    else:
+        order = [F.col("__t").asc(), F.col("__tag").asc(), by_value("__rv").asc()]
+        if direction == "nearest":
+            order.append(by_value("__nv").desc_nulls_last())
+    w = Window.partitionBy(*keys).orderBy(*order)
+    running = w.rowsBetween(Window.unboundedPreceding, 0)
+    fill = {
+        "__rv": F.last("__rv", ignorenulls=True).over(running),
+        "__nv": F.last("__nv", ignorenulls=True).over(running)
+        if direction == "forward"
+        else F.first("__nv", ignorenulls=True).over(w.rowsBetween(0, Window.unboundedFollowing)),
+    }
     filled = unioned.select(
-        *keys,
-        "__t",
-        "__tag",
-        *pass_left,
-        F.last("__rv", ignorenulls=True).over(w).alias("__rv"),
-    )
-    out = filled.where(F.col("__tag") == left_tag)
-    if tolerance_s is not None:
-        tol_us = int(tolerance_s * 1_000_000)
-        lt_us = F.unix_micros(F.col("__t").cast("timestamp"))
-        rt_us = F.unix_micros(F.col("__rv")[right_ts].cast("timestamp"))
-        delta = (lt_us - rt_us) if direction == "backward" else (rt_us - lt_us)
-        stale = delta > tol_us
-        out = out.withColumn("__rv", F.when(stale, F.lit(None).cast(rv_type)).otherwise(F.col("__rv")))
-    out = out.select(
-        *keys,
-        F.col("__t").alias(left_ts),
-        *pass_left,
-        *[F.col("__rv")[c].alias(c) for c in right_val_cols],
-    )
-    return out.select(*[f.name for f in out_schema.fields])
-
-
-def _asof_window_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    allow_exact: bool,
-    tolerance_s: float | None,
-    salt_buckets: int = 0,
-    direction: str = "nearest",
-) -> DataFrame:
-    """Pure-JVM nearest (r5): ONE sorted window pass computes BOTH the
-    latest-preceding and earliest-following snapshot, then a row-local
-    expression picks the closer (equidistant -> preceding, pandas' rule).
-
-    Mechanics: right rows are first deduped per (key, ts) to the greatest
-    value tuple (the same pre-dedup the cogroup nearest kernel performs —
-    it collapses the side-dependent tie rules), then each surviving right
-    row enters the union TWICE with separate prev/next struct columns and
-    tags ordered so the exactness rule holds on both sides simultaneously:
-    allow_exact puts the prev-copy BEFORE left rows at equal ts (visible to
-    ``last`` over (unboundedPreceding, 0)) and the next-copy after
-    (invisible to ``first`` over (0, unboundedFollowing) is wrong-way-
-    round: it IS visible, harmlessly — prev already matches at distance 0
-    and equidistant prefers preceding); strict reverses the tag order so
-    equal-ts rights are visible to NEITHER frame. Memory/skew behavior is
-    the window strategy's: one exchange, spill-backed sort, salting
-    composes. Tolerance filters each side independently before the choice
-    — equivalent to pandas' nearest+tolerance because the nearest valid
-    candidate always has the smaller distance."""
-    from pyspark.sql import Window
-
-    out_schema = _result_schema(left, right, on, right_ts)
-    typ = {f.name: f.dataType for f in out_schema.fields}
-    left_cols = [f.name for f in left.schema.fields]
-    right_val_cols = [f.name for f in right.schema.fields if f.name != on]
-    pass_left = [c for c in left_cols if c not in (on, left_ts)]
-    rv_type = T.StructType([T.StructField(c, typ[c], True) for c in right_val_cols])
-
-    # greatest-tuple dedup per (key, right_ts); arbitrary-but-consistent if
-    # no value column is orderable (documented _orderable limitation)
-    ord_cols = [c for c in right_val_cols if _orderable(typ[c])]
-    dedup_sort = [F.col(c).desc_nulls_last() for c in ord_cols] or [F.lit(0)]
-    dw = Window.partitionBy(on, right_ts).orderBy(*dedup_sort)
-    right = (
-        right.withColumn("__rn", F.row_number().over(dw))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    prev_tag, left_tag, next_tag = (0, 1, 2) if allow_exact else (2, 1, 0)
-    rv_struct = F.struct(*[F.col(c) for c in right_val_cols])
-    lt = left.select(
-        F.col(on),
-        F.col(left_ts).alias("__t"),
-        F.lit(left_tag).alias("__tag"),
-        *[F.col(c) for c in pass_left],
-        F.lit(None).cast(rv_type).alias("__pv"),
-        F.lit(None).cast(rv_type).alias("__nv"),
-    )
-    rp = right.select(
-        F.col(on),
-        F.col(right_ts).alias("__t"),
-        F.lit(prev_tag).alias("__tag"),
-        *[F.lit(None).cast(typ[c]).alias(c) for c in pass_left],
-        rv_struct.alias("__pv"),
-        F.lit(None).cast(rv_type).alias("__nv"),
-    )
-    rn = right.select(
-        F.col(on),
-        F.col(right_ts).alias("__t"),
-        F.lit(next_tag).alias("__tag"),
-        *[F.lit(None).cast(typ[c]).alias(c) for c in pass_left],
-        F.lit(None).cast(rv_type).alias("__pv"),
-        rv_struct.alias("__nv"),
-    )
-    keys = [on]
-    if salt_buckets > 0:
-        b = salt_buckets
-        lt = lt.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(on), F.col("__t")), F.lit(b)).cast("int")
-        )
-        salted = []
-        for r in (rp, rn):
-            salted.append(
-                r.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(b)])))
-                .withColumn("__salt", F.col("__salt").cast("int"))
-            )
-        rp, rn = salted
-        keys = [on, "__salt"]
-    cols_order = keys + ["__t", "__tag"] + pass_left + ["__pv", "__nv"]
-    unioned = (
-        lt.select(*cols_order)
-        .unionByName(rp.select(*cols_order))
-        .unionByName(rn.select(*cols_order))
-    )
-    order = [F.col("__t").asc(), F.col("__tag").asc()]
-    wp = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wn = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
-        0, Window.unboundedFollowing
-    )
-    filled = unioned.select(
-        *keys,
-        "__t",
-        "__tag",
-        *pass_left,
-        F.last("__pv", ignorenulls=True).over(wp).alias("__pv"),
-        F.first("__nv", ignorenulls=True).over(wn).alias("__nv"),
+        *keys, "__t", "__tag", *pass_left, *[fill[f].alias(f) for f in frames]
     ).where(F.col("__tag") == left_tag)
 
     lt_us = F.unix_micros(F.col("__t").cast("timestamp"))
-    dp = lt_us - F.unix_micros(F.col("__pv")[right_ts].cast("timestamp"))
-    dn = F.unix_micros(F.col("__nv")[right_ts].cast("timestamp")) - lt_us
-    pv, nv = F.col("__pv"), F.col("__nv")
-    if tolerance_s is not None:
-        tol_us = int(tolerance_s * 1_000_000)
-        pv = F.when(dp <= tol_us, pv)
-        nv = F.when(dn <= tol_us, nv)
-    # NULL-ts left rows: the next-frame would otherwise hand them the first
-    # following snapshot in sort order — they must stay unmatched
-    chosen = F.when(F.col("__t").isNull(), F.lit(None).cast(rv_type)).otherwise(
-        F.when(pv.isNotNull() & (nv.isNull() | (dp <= dn)), pv).otherwise(nv)
-    )
+    cand, dist = {}, {}
+    for f in frames:
+        rt_us = F.unix_micros(F.col(f)[right_ts].cast("timestamp"))
+        dist[f] = lt_us - rt_us if f == "__rv" else rt_us - lt_us
+        cand[f] = F.col(f)
+        if direction == "nearest" and f == "__nv":
+            # NULL-ts left rows sort first, where the following frame sees
+            # every right row of the key: they must stay unmatched
+            cand[f] = F.when(F.col("__t").isNotNull(), cand[f])
+        if tolerance_s is not None:
+            cand[f] = F.when(dist[f] > int(tolerance_s * 1_000_000), null_rv).otherwise(cand[f])
+    if direction == "nearest":
+        p, n = cand["__rv"], cand["__nv"]
+        pick_p = _prefer_preceding(p.isNotNull(), n.isNotNull(), dist["__rv"], dist["__nv"])
+        chosen = F.when(pick_p, p).otherwise(n)
+    else:
+        (chosen,) = cand.values()
     out = filled.withColumn("__rv", chosen).select(
         *keys,
         F.col("__t").alias(left_ts),
@@ -519,7 +411,6 @@ def _asof_cogroup(
     tolerance_s: float | None,
     direction: str,
     salt_buckets: int,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     out_schema = _result_schema(left, right, on, right_ts)
     left_cols = [f.name for f in left.schema.fields]
@@ -530,6 +421,7 @@ def _asof_cogroup(
     ord_val_cols = [c for c in right_val_cols if _orderable(rtyp[c])]
     out_names = [f.name for f in out_schema.fields]
     tol_ns = None if tolerance_s is None else int(tolerance_s * 1e9)
+    no_match = {c: pd.NaT if c == right_ts else np.nan for c in right_val_cols}
 
     def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         """Multi-key vectorized as-of: binary-search merge over per-key sorted
@@ -537,28 +429,19 @@ def _asof_cogroup(
         lpdf = lpdf[left_cols]
         if len(lpdf) == 0:
             return pd.DataFrame(columns=out_names)
-        if len(rpdf) == 0:
-            out = lpdf.copy()
-            for c in right_val_cols:
-                out[c] = pd.NaT if c == right_ts else np.nan
-            return out[out_names]
-        l = lpdf.copy()
-        # right key arrives renamed __rk: Spark's cogroup drops right-side
-        # columns whose names duplicate left-side ones
-        r = rpdf[["__rk"] + right_val_cols].rename(columns={"__rk": on})
-        l["__lts"] = pd.to_datetime(l[left_ts]).astype("datetime64[ns]")
-        r["__rts"] = pd.to_datetime(r[right_ts]).astype("datetime64[ns]")
+        lts = pd.to_datetime(lpdf[left_ts]).astype("datetime64[ns]")
         # left rows with NULL ts: merge_asof refuses null merge keys (it
         # would abort the whole job); route them around the merge and emit
         # them left-outer style with null right columns, matching what the
         # window/merge strategies produce for the same rows
-        lnull = l[l["__lts"].isna()]
-        l = l[l["__lts"].notna()]
-        if len(l) == 0:
-            out = lnull.drop(columns="__lts")
-            for c in right_val_cols:
-                out[c] = pd.NaT if c == right_ts else np.nan
-            return out[out_names]
+        if len(rpdf) == 0 or lts.isna().all():
+            return lpdf.assign(**no_match)[out_names]
+        lnull = lpdf[lts.isna()]
+        l = lpdf.assign(__lts=lts)[lts.notna()]
+        # right key arrives renamed __rk: Spark's cogroup drops right-side
+        # columns whose names duplicate left-side ones
+        r = rpdf[["__rk"] + right_val_cols].rename(columns={"__rk": on})
+        r["__rts"] = pd.to_datetime(r[right_ts]).astype("datetime64[ns]")
         l = l.sort_values("__lts", kind="mergesort")
         # value columns as trailing sort keys so duplicate right rows at equal
         # (key, ts) resolve to the GREATEST value tuple in both directions:
@@ -573,21 +456,18 @@ def _asof_cogroup(
                 ascending=[True] + [False] * len(ord_val_cols),
                 na_position="last",
             )
-        elif direction == "nearest":
+        else:
+            r = r.sort_values(
+                ["__rts"] + ord_val_cols, kind="mergesort", na_position="first"
+            )
+        if direction == "nearest":
             # nearest keeps the LAST tie on the backward side but the FIRST
             # on the forward side, so no single sort order yields the
             # greatest-tuple rule on both sides. Instead: pre-dedup right
             # rows per (key, ts) to the greatest value tuple — after which
             # pandas' side rules have nothing left to choose between, and
             # only its documented equidistant rule (prefer preceding) acts.
-            r = r.sort_values(
-                ["__rts"] + ord_val_cols, kind="mergesort", na_position="first"
-            )
             r = r.drop_duplicates(subset=[on, "__rts"], keep="last")
-        else:
-            r = r.sort_values(
-                ["__rts"] + ord_val_cols, kind="mergesort", na_position="first"
-            )
         kw = {}
         if tol_ns is not None:
             kw["tolerance"] = pd.Timedelta(tol_ns, unit="ns")
@@ -603,51 +483,30 @@ def _asof_cogroup(
         )
         out = out[out_names]
         if len(lnull):
-            extra = lnull.drop(columns="__lts")
-            for c in right_val_cols:
-                extra[c] = pd.NaT if c == right_ts else np.nan
-            out = pd.concat([out, extra[out_names]], ignore_index=True)
+            out = pd.concat([out, lnull.assign(**no_match)[out_names]], ignore_index=True)
         return out
 
-    if n_buckets is None:
-        sc = left.sparkSession.sparkContext
-        n_buckets = max(int(sc.defaultParallelism) * 4, 32)
-
-    if salt_buckets > 0:
-        # hot-key variant (J2): left rows spread over B salts, right replicated
-        # xB — bounds the size of any single (bucket, salt) group even when one
-        # key dominates; still bucketed so group count stays O(buckets x B)
-        b = salt_buckets
-        lft = left.withColumn(
-            "__b", F.pmod(F.xxhash64(F.col(on)), F.lit(n_buckets)).cast("int")
-        ).withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(on), F.col(left_ts)), F.lit(b)).cast("int")
-        )
-        rgt = (
-            right.withColumnRenamed(on, "__rk")
-            .withColumn("__b", F.pmod(F.xxhash64(F.col("__rk")), F.lit(n_buckets)).cast("int"))
-            .withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(b)])))
-            .withColumn("__salt", F.col("__salt").cast("int"))
-        )
-        return (
-            lft.groupBy("__b", "__salt")
-            .cogroup(rgt.groupBy("__b", "__salt"))
-            .applyInPandas(lambda l, r: kernel(l, r), schema=out_schema)
-        )
-
+    n_buckets = max(int(left.sparkSession.sparkContext.defaultParallelism) * 4, 32)
     lft = left.withColumn("__b", F.pmod(F.xxhash64(F.col(on)), F.lit(n_buckets)).cast("int"))
     rgt = right.withColumnRenamed(on, "__rk").withColumn(
         "__b", F.pmod(F.xxhash64(F.col("__rk")), F.lit(n_buckets)).cast("int")
     )
+    groups = ["__b"]
+    if salt_buckets > 0:
+        # hot-key variant (J2): bounds the size of any single (bucket, salt)
+        # group even when one key dominates; still bucketed so the group
+        # count stays O(buckets x B)
+        lft, rgt = _salt(lft, rgt, on, left_ts, salt_buckets)
+        groups.append("__salt")
     return (
-        lft.groupBy("__b")
-        .cogroup(rgt.groupBy("__b"))
-        .applyInPandas(lambda l, r: kernel(l, r), schema=out_schema)
+        lft.groupBy(*groups)
+        .cogroup(rgt.groupBy(*groups))
+        .applyInPandas(kernel, schema=out_schema)
     )
 
 
 # --------------------------------------------------------------------------
-# strategy (b): range-partitioned, sort-within-partition streaming merge
+# strategy (b): hash-co-located, sort-within-partition streaming merge
 # --------------------------------------------------------------------------
 
 
@@ -815,14 +674,15 @@ def _asof_merge_nearest(
     ``__b_*`` names; its OUTPUT is then the left side of the forward pass,
     which attaches the earliest-following candidate under ``__f_*`` names
     (the ``__b_*`` columns ride through as inert left payload). A final
-    pure-column projection picks the closer candidate row-atomically —
-    equidistant -> preceding, the same rule as _asof_window_nearest and the
-    cogroup kernel (pandas' rule), pinned by the randomized three-strategy
-    parity test. Each pass is the merge kernel itself, so the hot-key story
-    is unchanged: worker memory stays O(Arrow batch + 1 carried row) per
-    pass regardless of key heat — this is the nearest-direction path a
-    pathologically hot key could not take through window (single-task sort
-    pressure is spill-backed there, but cogroup would OOM).
+    pure-column projection picks the closer candidate row-atomically with
+    ``_prefer_preceding`` — equidistant -> preceding, the same rule as
+    window nearest and the cogroup kernel (pandas' rule), pinned by the
+    randomized three-strategy parity test. Each pass is the merge kernel
+    itself, so the hot-key story is unchanged: worker memory stays O(Arrow
+    batch + 1 carried row) per pass regardless of key heat — this is the
+    nearest-direction path a pathologically hot key could not take through
+    window (single-task sort pressure is spill-backed there, but cogroup
+    would OOM).
 
     allow_exact/tolerance need no extra handling: each leg applies its own
     exactness tie rule and staleness filter, so an equal-ts snapshot
@@ -855,7 +715,7 @@ def _asof_merge_nearest(
     lt_us = F.unix_micros(F.col(left_ts).cast("timestamp"))
     dp = lt_us - F.unix_micros(F.col("__b_" + right_ts).cast("timestamp"))
     dn = F.unix_micros(F.col("__f_" + right_ts).cast("timestamp")) - lt_us
-    pick_b = have_b & (~have_f | (dp <= dn))
+    pick_b = _prefer_preceding(have_b, have_f, dp, dn)
     chosen = [
         F.when(pick_b, F.col("__b_" + c)).when(have_f, F.col("__f_" + c)).alias(c)
         for c in right_val_cols

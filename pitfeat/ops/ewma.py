@@ -58,26 +58,37 @@ def _ewma_continue(xv: pd.Series, seed: float | None, alpha: float) -> np.ndarra
     return xv.ewm(alpha=alpha, adjust=False).mean().to_numpy()
 
 
-def ewma(
-    df: DataFrame,
-    col: str,
-    alpha: float,
-    key: str = "conv_id",
-    ts: str = "ts",
-    order_extra: tuple[str, ...] = (),
-    out_col: str | None = None,
-) -> DataFrame:
-    """Append ``out_col`` (default ``<col>_ewma``) = per-``key`` EWMA of
-    ``col`` in (``ts``, ``*order_extra``) order, ``adjust=False`` recurrence
-    seeded by each key's first valid value."""
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"ewma: alpha must be in (0, 1], got {alpha}")
+def _ewma_out_col(df: DataFrame, op: str, col: str, out_col: str | None, taken=None) -> str:
+    """Argument checks every EWMA op (batch and streaming) shares; returns
+    the output column name (default ``<col>_ewma``), which must not be one
+    of ``taken``, the names the output already holds (default: every input
+    column)."""
     if col not in df.columns:
-        raise ValueError(f"ewma: no such column {col!r}")
+        raise ValueError(f"{op}: no such column {col!r}")
     out_col = out_col or f"{col}_ewma"
-    if out_col in df.columns:
-        raise ValueError(f"ewma: output column {out_col!r} already exists")
+    if out_col in (df.columns if taken is None else taken):
+        raise ValueError(f"{op}: output column {out_col!r} already exists")
+    return out_col
 
+
+def _ewma_batch_scaffold(
+    df: DataFrame,
+    op: str,
+    col: str,
+    key: str,
+    ts: str,
+    order_extra: tuple[str, ...],
+    out_col: str | None,
+    prepare,
+) -> DataFrame:
+    """The batch scaffold of ``ewma`` and ``ewma_time``: only the per-run
+    kernel differs. ``prepare(pdf, x)`` sees one Arrow batch (``x`` = ``col``
+    as float) and returns ``(valid, run)``: the rows that update the state,
+    and ``run(vidx, seed, carry)`` -> ``(y, state)``, one key's EWMA over its
+    valid rows ``vidx`` continued from ``seed`` (None: fresh key); ``carry``
+    says a later batch may need the state, which ``run`` may leave None
+    otherwise."""
+    out_col = _ewma_out_col(df, op, col, out_col)
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
     )
@@ -93,31 +104,54 @@ def ewma(
     )
 
     def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # key -> last valid EWMA value. The sorted stream is key-contiguous,
-        # so only each batch's FINAL key can continue into the next batch:
-        # state shrinks to one scalar at every batch boundary.
+        # key -> carried state. The sorted stream is key-contiguous, so only
+        # each batch's FINAL key can continue into the next batch: state
+        # shrinks to that one key at every batch boundary.
         state: dict = {}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             pdf = pdf.reset_index(drop=True)
             x = pd.to_numeric(pdf[col], errors="coerce").astype(float)
+            valid, run = prepare(pdf, x)
             y = np.full(len(pdf), np.nan)
-            for k, idx in pdf.groupby(key, sort=False).indices.items():
-                xs = x.iloc[idx]
-                valid = xs.notna().to_numpy()
-                if not valid.any():
-                    continue  # state (if any) persists untouched
-                yv = _ewma_continue(xs[valid], state.get(k), alpha)
-                y[idx[valid]] = yv
-                state[k] = float(yv[-1])
             last_key = pdf[key].iloc[-1]
+            for k, idx in pdf.groupby(key, sort=False).indices.items():
+                vidx = idx[valid[idx]]
+                if len(vidx) == 0:
+                    continue  # state (if any) persists untouched
+                y[vidx], state[k] = run(vidx, state.get(k), k in state or k == last_key)
             state = {last_key: state[last_key]} if last_key in state else {}
             res = pdf.copy()
             res[out_col] = y
             yield res[out_names]
 
     return staged.mapInPandas(stream, schema=out_schema)
+
+
+def ewma(
+    df: DataFrame,
+    col: str,
+    alpha: float,
+    key: str = "conv_id",
+    ts: str = "ts",
+    order_extra: tuple[str, ...] = (),
+    out_col: str | None = None,
+) -> DataFrame:
+    """Append ``out_col`` (default ``<col>_ewma``) = per-``key`` EWMA of
+    ``col`` in (``ts``, ``*order_extra``) order, ``adjust=False`` recurrence
+    seeded by each key's first valid value."""
+    if not (0.0 < alpha <= 1.0):
+        raise ValueError(f"ewma: alpha must be in (0, 1], got {alpha}")
+
+    def prepare(pdf: pd.DataFrame, x: pd.Series):
+        def run(vidx, seed, carry):
+            yv = _ewma_continue(x.iloc[vidx], seed, alpha)
+            return yv, float(yv[-1])
+
+        return x.notna().to_numpy(), run
+
+    return _ewma_batch_scaffold(df, "ewma", col, key, ts, order_extra, out_col, prepare)
 
 
 def _ewma_time_continue(
@@ -177,14 +211,14 @@ def ewma_time(
     — exactly: the weight of observation j at row i is
     ``0.5 ** ((t_i - t_j) / halflife)`` and the output is the weighted mean.
 
-    Spark mapping: the same repartitionByRange + sortWithinPartitions + ONE
-    mapInPandas staging as ``ewma``. Runs that start inside an Arrow batch
-    take pandas' C-vectorized times-ewm kernel; the (at most one) run that
-    continues across a batch boundary runs an exact scalar replica of that
-    kernel — BIT-IDENTICAL to the vectorized path (the replica reproduces
-    pandas' op order: float64-cast ns deltas, ``old_wt *= 0.5**delta``,
-    the equal-value short-circuit, ``old_wt += 1``; pinned by the
-    batch-boundary parity test), so output is invariant to partitioning
+    Spark mapping: ``ewma``'s staging and batch loop (``_ewma_batch_scaffold``).
+    Runs that start inside an Arrow batch take pandas' C-vectorized
+    times-ewm kernel; the (at most one) run that continues across a batch
+    boundary runs an exact scalar replica of that kernel — BIT-IDENTICAL
+    to the vectorized path (the replica reproduces pandas' op order:
+    float64-cast ns deltas, ``old_wt *= 0.5**delta``, the equal-value
+    short-circuit, ``old_wt += 1``; pinned by the batch-boundary parity
+    test), so output is invariant to partitioning
     and Arrow batch size. Carried state is THREE scalars per boundary key
     (weighted mean, accumulated weight, last valid event-time) — the same
     O(1) bounded-memory story as ``ewma``, with one honest caveat: a key
@@ -205,71 +239,36 @@ def ewma_time(
     """
     if not halflife_s > 0:
         raise ValueError(f"ewma_time: halflife_s must be > 0, got {halflife_s}")
-    if col not in df.columns:
-        raise ValueError(f"ewma_time: no such column {col!r}")
-    out_col = out_col or f"{col}_ewma"
-    if out_col in df.columns:
-        raise ValueError(f"ewma_time: output column {out_col!r} already exists")
-
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
-    )
-    out_names = [f.name for f in out_schema.fields]
     hl_ns = float(pd.Timedelta(seconds=halflife_s).value)
     hl_td = pd.Timedelta(seconds=halflife_s)
 
-    # hash repartition: same key co-location, no range-sampling pass (see
-    # the row-hop kernel's staging note)
-    staged = df.repartition(F.col(key)).sortWithinPartitions(
-        F.col(key).asc(),
-        F.col(ts).asc(),
-        *[F.col(c).asc() for c in order_extra],
-    )
+    def prepare(pdf: pd.DataFrame, x: pd.Series):
+        tv = pd.to_datetime(pdf[ts])
+        try:
+            tv = tv.dt.tz_localize(None)
+        except TypeError:
+            pass
+        t64 = tv.values.astype("datetime64[ns]")
+        # float64 cast of absolute ns BEFORE differencing — pandas'
+        # _calculate_deltas order, required for bit-parity
+        tf_all = t64.view("int64").astype(np.float64)
+        xa = x.to_numpy()
 
-    def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            x = pd.to_numeric(pdf[col], errors="coerce").astype(float)
-            tv = pd.to_datetime(pdf[ts])
-            try:
-                tv = tv.dt.tz_localize(None)
-            except TypeError:
-                pass
-            t64 = tv.values.astype("datetime64[ns]")
-            # float64 cast of absolute ns BEFORE differencing — pandas'
-            # _calculate_deltas order, required for bit-parity
-            tf_all = t64.view("int64").astype(np.float64)
-            valid_all = x.notna().to_numpy() & ~np.isnat(t64)
-            y = np.full(len(pdf), np.nan)
-            last_key = pdf[key].iloc[-1]
-            for k, idx in pdf.groupby(key, sort=False).indices.items():
-                vidx = idx[valid_all[idx]]
-                if len(vidx) == 0:
-                    continue  # state (if any) persists untouched
-                xs = x.to_numpy()[vidx]
-                if k in state or k == last_key:
-                    # continuation, or the one run whose state the next
-                    # batch may need: exact scalar kernel (yields old_wt,
-                    # which the vectorized path does not expose)
-                    yv, st = _ewma_time_continue(
-                        xs, tf_all[vidx], hl_ns, state.get(k)
-                    )
-                    state[k] = st
-                else:
-                    # fresh interior run: pandas' C kernel
-                    yv = (
-                        pd.Series(xs)
-                        .ewm(halflife=hl_td, times=t64[vidx], adjust=True)
-                        .mean()
-                        .to_numpy()
-                    )
-                y[vidx] = yv
-            state = {last_key: state[last_key]} if last_key in state else {}
-            res = pdf.copy()
-            res[out_col] = y
-            yield res[out_names]
+        def run(vidx, seed, carry):
+            if carry:
+                # continuation, or the one run whose state the next batch
+                # may need: exact scalar kernel (yields old_wt, which the
+                # vectorized path does not expose)
+                return _ewma_time_continue(xa[vidx], tf_all[vidx], hl_ns, seed)
+            # fresh interior run: pandas' C kernel
+            yv = (
+                pd.Series(xa[vidx])
+                .ewm(halflife=hl_td, times=t64[vidx], adjust=True)
+                .mean()
+                .to_numpy()
+            )
+            return yv, None
 
-    return staged.mapInPandas(stream, schema=out_schema)
+        return x.notna().to_numpy() & ~np.isnat(t64), run
+
+    return _ewma_batch_scaffold(df, "ewma_time", col, key, ts, order_extra, out_col, prepare)

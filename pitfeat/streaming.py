@@ -252,6 +252,73 @@ def asof_features_microbatch(snapshots: DataFrame):
     return transform
 
 
+def _stream_ewma(
+    turns: DataFrame,
+    op: str,
+    col: str,
+    key: str,
+    ts: str,
+    order_extra: tuple[str, ...],
+    out_col: str | None,
+    valid_cols: list[str],
+    state_schema: str,
+    run,
+) -> DataFrame:
+    """The stateful-operator scaffold of ``stream_ewma`` and
+    ``stream_ewma_time``: source projection, DDL schema and output select.
+    Per group and micro-batch, the rows sort by (``t_us``, *order_extra);
+    those with every ``valid_cols`` non-null go to ``run(rows, state)`` —
+    ``state`` is the carried tuple or None — which returns ``(y, new_state)``.
+    Rows with a null in ``valid_cols`` emit null and leave state untouched."""
+    import numpy as np
+    import pandas as pd
+
+    from pitfeat.ops.ewma import _ewma_out_col
+
+    extras = list(order_extra)
+    out_col = _ewma_out_col(turns, op, col, out_col, [key, ts, "t_us", *extras, col])
+    types = {f.name: f.dataType.simpleString() for f in turns.schema.fields}
+    src = turns.select(
+        F.col(key),
+        F.unix_micros(F.col(ts).cast("timestamp")).alias("t_us"),
+        *[F.col(c) for c in extras],
+        F.col(col).cast("double").alias(col),
+    )
+    # segment-list join: with order_extra=() the old string-concat form
+    # emitted '..., t_us long, , value double' and failed to parse (ADVICE r6)
+    out_schema = ", ".join(
+        [f"{key} {types[key]}", "t_us long"]
+        + [f"{c} {types[c]}" for c in extras]
+        + [f"{col} double", f"{out_col} double"]
+    )
+
+    def fn(group_key, pdfs, state):
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        pdf = pdf.sort_values(["t_us"] + extras).reset_index(drop=True)
+        vidx = np.flatnonzero(pdf[valid_cols].notna().all(axis=1).to_numpy())
+        y = np.full(len(pdf), np.nan)
+        if len(vidx):
+            y[vidx], st = run(pdf.iloc[vidx], tuple(state.get) if state.exists else None)
+            state.update(st)
+        pdf[out_col] = y
+        yield pdf
+
+    out = src.groupBy(key).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf="NoTimeout",
+    )
+    return out.select(
+        key,
+        *extras,
+        F.timestamp_micros(F.col("t_us")).alias(ts),
+        col,
+        out_col,
+    )
+
+
 def stream_ewma(
     turns: DataFrame,
     col: str,
@@ -275,57 +342,18 @@ def stream_ewma(
     ``stream_pit_features``). Null inputs emit null and leave state
     untouched. State is O(1) per key — no history, no watermark needed.
     """
-    import numpy as np
-    import pandas as pd
-
     from pitfeat.ops.ewma import _ewma_continue
 
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"stream_ewma: alpha must be in (0, 1], got {alpha}")
-    out_col = out_col or f"{col}_ewma"
-    extras = list(order_extra)
-    types = {f.name: f.dataType.simpleString() for f in turns.schema.fields}
-    src = turns.select(
-        F.col(key),
-        F.unix_micros(F.col(ts).cast("timestamp")).alias("t_us"),
-        *[F.col(c) for c in extras],
-        F.col(col).cast("double").alias(col),
-    )
-    # segment-list join: with order_extra=() the old string-concat form
-    # emitted '..., t_us long, , value double' and failed to parse (ADVICE r6)
-    out_schema = ", ".join(
-        [f"{key} {types[key]}", "t_us long"]
-        + [f"{c} {types[c]}" for c in extras]
-        + [f"{col} double", f"{out_col} double"]
-    )
 
-    def fn(group_key, pdfs, state):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["t_us"] + extras).reset_index(drop=True)
-        x = pdf[col]
-        valid = x.notna().to_numpy()
-        y = np.full(len(pdf), np.nan)
-        seed = state.get[0] if state.exists else None
-        if valid.any():
-            yv = _ewma_continue(x[valid], seed, alpha)
-            y[np.flatnonzero(valid)] = yv
-            state.update((float(yv[-1]),))
-        pdf[out_col] = y
-        yield pdf
+    def run(rows, st):
+        yv = _ewma_continue(rows[col], None if st is None else st[0], alpha)
+        return yv, (float(yv[-1]),)
 
-    out = src.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="y double",
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-    return out.select(
-        key,
-        *extras,
-        F.timestamp_micros(F.col("t_us")).alias(ts),
-        col,
-        out_col,
+    return _stream_ewma(
+        turns, "stream_ewma", col, key, ts, order_extra, out_col,
+        [col], "y double", run,
     )
 
 
@@ -360,58 +388,18 @@ def stream_ewma_time(
         raise ValueError(
             f"stream_ewma_time: halflife_s must be > 0, got {halflife_s}"
         )
-    out_col = out_col or f"{col}_ewma"
     hl_ns = float(pd.Timedelta(seconds=halflife_s).value)
-    extras = list(order_extra)
-    types = {f.name: f.dataType.simpleString() for f in turns.schema.fields}
-    src = turns.select(
-        F.col(key),
-        F.unix_micros(F.col(ts).cast("timestamp")).alias("t_us"),
-        *[F.col(c) for c in extras],
-        F.col(col).cast("double").alias(col),
-    )
-    # segment-list join: with order_extra=() the old string-concat form
-    # emitted '..., t_us long, , value double' and failed to parse (ADVICE r6)
-    out_schema = ", ".join(
-        [f"{key} {types[key]}", "t_us long"]
-        + [f"{c} {types[c]}" for c in extras]
-        + [f"{col} double", f"{out_col} double"]
-    )
 
-    def fn(group_key, pdfs, state):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["t_us"] + extras).reset_index(drop=True)
-        x = pdf[col]
+    def run(rows, st):
         # micro-batch ns as float64 — µs * 1000 is the exact int the batch
         # path derives from the timestamp, so the float casts agree
-        t_us = pdf["t_us"]
-        valid = (x.notna() & t_us.notna()).to_numpy()
-        y = np.full(len(pdf), np.nan)
-        st = tuple(state.get) if state.exists else None
-        if valid.any():
-            vidx = np.flatnonzero(valid)
-            tf = (t_us.iloc[vidx].to_numpy().astype("int64") * 1000).astype(
-                np.float64
-            )
-            yv, st2 = _ewma_time_continue(
-                x.iloc[vidx].to_numpy().astype(float), tf, hl_ns, st
-            )
-            y[vidx] = yv
-            state.update((float(st2[0]), float(st2[1]), float(st2[2])))
-        pdf[out_col] = y
-        yield pdf
+        tf = (rows["t_us"].to_numpy().astype("int64") * 1000).astype(np.float64)
+        yv, st2 = _ewma_time_continue(
+            rows[col].to_numpy().astype(float), tf, hl_ns, st
+        )
+        return yv, tuple(float(v) for v in st2)
 
-    out = src.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="y double, w double, t_ns double",
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-    return out.select(
-        key,
-        *extras,
-        F.timestamp_micros(F.col("t_us")).alias(ts),
-        col,
-        out_col,
+    return _stream_ewma(
+        turns, "stream_ewma_time", col, key, ts, order_extra, out_col,
+        [col, "t_us"], "y double, w double, t_ns double", run,
     )

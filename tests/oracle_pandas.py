@@ -40,6 +40,35 @@ def asof_oracle(
     return out.sort_values([on, "turn_idx"]).reset_index(drop=True)
 
 
+def asof_dedup_oracle(
+    left: pd.DataFrame,
+    right: pd.DataFrame,
+    on: str = "conv_id",
+    left_ts: str = "ts",
+    right_ts: str = "snap_ts",
+    **kw,
+) -> pd.DataFrame:
+    """``asof_join``'s full contract through ``pandas.merge_asof``, nulls and
+    duplicates included. Right rows with a null key or ts never match; left
+    rows with a null key or ts come back unmatched; right rows sharing
+    (key, ts) are first deduped to the greatest value tuple (nulls first),
+    so pandas' direction-dependent tie rules never see a duplicate.
+    Output is sorted by ``turn_idx``."""
+    val_cols = [c for c in right.columns if c not in (on, right_ts)]
+    r = right[right[on].notna() & right[right_ts].notna()]
+    r = r.sort_values(
+        [on, right_ts] + val_cols, kind="mergesort", na_position="first"
+    ).drop_duplicates(subset=[on, right_ts], keep="last")
+    ok = left[on].notna() & left[left_ts].notna()
+    matched = asof_oracle(left[ok], r, on, left_ts, right_ts, **kw)
+    unmatched = left[~ok].copy()
+    for c in r.columns:
+        if c != on:
+            unmatched[c] = r[c].iloc[:0].reindex(unmatched.index)
+    out = pd.concat([matched, unmatched[matched.columns]], ignore_index=True)
+    return out.sort_values("turn_idx").reset_index(drop=True)
+
+
 def gap_oracle(t: pd.DataFrame) -> pd.Series:
     t = t.sort_values(["conv_id", "turn_idx"])
     return t.groupby("conv_id")["ts"].transform(

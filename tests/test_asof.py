@@ -399,3 +399,74 @@ def test_merge_nearest_matches_pandas(
     )
     oracle = asof_oracle(transcripts_pd, snapshots_pd, direction="nearest")
     _assert_matches_oracle(out, oracle)
+
+
+# ---------- seeded differential test over the full strategy x direction matrix ----------
+
+
+def _matrix_frames(spark, seed):
+    """Random frames carrying every edge the as-of contract defines: duplicate
+    right (key, ts) rows, equal-ts ties, equidistant nearest pairs, null left
+    ts, null left and right keys, null right ts, keys with no right rows, and
+    one hot key (~30% of left rows) for the targeted-salting split."""
+    rs = np.random.RandomState(seed)
+    t0 = pd.Timestamp("2026-03-01")
+    keys = [f"k{i}" for i in range(10)]  # k8, k9: no right rows
+
+    def at(s):
+        return (t0 + pd.Timedelta(seconds=int(s))).to_pydatetime()
+
+    rrows = []
+    for _ in range(160):
+        key = None if rs.rand() < 0.03 else keys[rs.randint(8)]
+        ts = None if rs.rand() < 0.03 else at(rs.randint(0, 1200))
+        rrows.append((key, ts, float(rs.randint(0, 3)), None if rs.rand() < 0.2 else float(rs.randint(0, 50))))
+    for key, ts, _, _ in rrows[:40:4]:  # duplicates differing only in value
+        rrows.append((key, ts, float(rs.randint(0, 3)), None if rs.rand() < 0.3 else float(rs.randint(0, 50))))
+    lrows = []
+    for i in range(360):
+        key = None if rs.rand() < 0.04 else ("k0" if rs.rand() < 0.3 else keys[rs.randint(10)])
+        u = rs.rand()
+        if u < 0.05:
+            ts = None
+        elif u < 0.25:  # equal-ts tie with some right row
+            ts = rrows[rs.randint(len(rrows))][1]
+        else:  # even seconds: equidistant pairs around odd-gap rights
+            ts = at(2 * rs.randint(0, 600))
+        lrows.append((key, i, ts))
+    for k, s in (("k1", 500), ("k2", 700)):  # planted equidistant pairs
+        rrows += [(k, at(s - 30), 1.0, 1.0), (k, at(s + 30), 2.0, 2.0)]
+        lrows.append((k, len(lrows), at(s)))
+    left = spark.createDataFrame(lrows, "conv_id string, turn_idx long, ts timestamp")
+    right = spark.createDataFrame(
+        rrows, "conv_id string, snap_ts timestamp, f_a double, f_b double"
+    )
+    return left, right
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+@pytest.mark.parametrize("strategy", ["window", "merge", "cogroup"])
+def test_asof_matrix_matches_dedup_oracle(spark, strategy, direction):
+    """Every strategy x direction cell, with and without exact matches and a
+    finite tolerance (window and cogroup also through the targeted salted
+    split), equals pandas merge_asof on the greatest-tuple-deduped right side."""
+    from tests.oracle_pandas import asof_dedup_oracle
+
+    left, right = _matrix_frames(spark, seed=31)
+    lpd, rpd = left.toPandas(), right.toPandas()
+    salts = [{}] if strategy == "merge" else [{}, {"salt_buckets": 3, "hot_threshold": 60}]
+    for allow_exact in (True, False):
+        for tol in (None, 45.0):
+            want = asof_dedup_oracle(
+                lpd, rpd, allow_exact=allow_exact, tolerance_s=tol, direction=direction
+            )
+            for salt in salts:
+                got = (
+                    asof_join(left, right, allow_exact=allow_exact, tolerance_s=tol,
+                              direction=direction, strategy=strategy, **salt)
+                    .toPandas().sort_values("turn_idx").reset_index(drop=True)
+                )
+                pd.testing.assert_frame_equal(
+                    got, want[got.columns], check_dtype=False,
+                    obj=f"{strategy}/{direction} exact={allow_exact} tol={tol} {salt}",
+                )

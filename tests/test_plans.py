@@ -171,3 +171,27 @@ def test_ewma_time_plan_single_pass(spark):
     assert "hashpartitioning(user_id" in plan, plan[:800]
     assert "BatchEvalPython" not in plan
     assert "Window" not in plan
+
+
+def test_window_asof_plan_shapes(spark):
+    """The window strategy is ONE sorted pass for every direction: backward
+    (the flagship build's path) plans exactly one Exchange, one Sort and one
+    Window, and forward and nearest add no shuffle of their own — nearest
+    fills its preceding and following frames in that same Window. Backward
+    and forward fill by running frames only: Spark re-evaluates an
+    (n, unboundedFollowing) frame for every row, quadratic in one key's
+    rows. (Local inputs, so the count is the operator's own: the cached
+    fixtures print their build plans too.)"""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1)
+    left = spark.createDataFrame([("c1", 1, t)], "conv_id string, turn_idx int, ts timestamp")
+    right = spark.createDataFrame([("c1", t, 1.0)], "conv_id string, snap_ts timestamp, f double")
+    plan = _plan(asof_join(left, right))
+    counts = [plan.count(node) for node in ("Exchange", "Sort [", "Window [")]
+    assert counts == [1, 1, 1], plan[:1500]
+    for direction in ("backward", "forward", "nearest"):
+        plan = _plan(asof_join(left, right, direction=direction))
+        assert plan.count("Exchange") <= 1, (direction, plan[:1500])
+        if direction != "nearest":
+            assert "unboundedfollowing" not in plan.lower(), (direction, plan[:1500])

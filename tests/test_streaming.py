@@ -497,3 +497,31 @@ def test_stream_ewma_schema_with_empty_order_extra(spark, transcripts, tmp_path)
         assert [f.name for f in out.schema.fields] == [
             "conv_id", "ts", "x", "x_ewma",
         ], op.__name__
+
+
+def test_stream_ewma_argument_errors_match_batch(transcripts):
+    """A missing ``col`` or a colliding ``out_col`` raises the same
+    ValueError in both streaming EWMA variants as in the batch ops, before
+    any stateful plan is built. The streaming ops emit only key, ts,
+    order_extra and ``col``, so an ``out_col`` naming another input column
+    does not collide there."""
+    from pyspark.sql import functions as F
+
+    from pitfeat.ops.ewma import ewma, ewma_time
+    from pitfeat.streaming import stream_ewma, stream_ewma_time
+
+    base = transcripts.select(
+        "conv_id", "turn_idx", "ts", "role", F.lit(1.0).alias("x")
+    )
+    for op in (stream_ewma, stream_ewma_time, ewma, ewma_time):
+        with pytest.raises(ValueError, match="no such column"):
+            op(base, "nope", 0.5)
+        with pytest.raises(ValueError, match="already exists"):
+            op(base, "x", 0.5, out_col="turn_idx")
+    for op in (ewma, ewma_time):
+        with pytest.raises(ValueError, match="already exists"):
+            op(base, "x", 0.5, out_col="role")
+    for op in (stream_ewma, stream_ewma_time):
+        assert op(base, "x", 0.5, out_col="role").columns == [
+            "conv_id", "turn_idx", "ts", "x", "role"
+        ]
