@@ -13,7 +13,14 @@ Four families, each scale-designed:
 - SimHash: 64-bit signature from per-shingle hash bit votes; near-dups are
   pairs within Hamming distance d, found via 4-segment LSH partitioning
   (pigeonhole: d<=3 guarantees one equal 16-bit segment).
-- n-gram Jaccard: exact verification kernel used by both LSH paths.
+- n-gram Jaccard: exact pairwise Jaccard over string shingle sets for two
+  small candidate sets (a cross join; neither LSH path calls it).
+
+The three text kernels share one front end (``_token_hashes`` +
+``_ngram_hashes``) and differ only in their per-row reduction; the LSH
+paths (and ``similarity.embedding_near_dup_pairs``) share one banded
+candidate-pair self-join (``_bucket_pairs``) and one write-once table
+barrier (``_materialize``).
 
 At 100TB the only shuffles are groupBys on banded keys whose fanout we
 control (B bands x rows), and candidate verification joins are
@@ -22,8 +29,13 @@ bucket-bounded. No driver-side state anywhere.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+
+from pitfeat.ops.text import fingerprint
 
 # Mersenne prime for affine minhash permutations; 31-bit so a*h + b stays
 # well under 2^63 (Spark 4 runs ANSI mode: long overflow would throw)
@@ -31,12 +43,12 @@ _P = (1 << 31) - 1
 
 
 def _shingles(text_col, n: int = 3):
-    """Word n-gram shingle array from a text column.
+    """Word n-gram shingle array from a text column (ngram_jaccard's string
+    shingles; docs shorter than n tokens give one shingle, the whole
+    normalized string).
 
-    NOT deduplicated: minhash is duplicate-insensitive (min over a multiset ==
-    min over its set) and array_intersect/array_union already use set
-    semantics for Jaccard — while Spark's array_distinct is O(len^2) and
-    dominated the whole dedup pipeline when applied here."""
+    NOT deduplicated: array_intersect/array_union already use set semantics
+    for Jaccard, while Spark's array_distinct is O(len^2)."""
     toks = F.split(F.regexp_replace(F.lower(F.trim(text_col)), r"\s+", " "), " ")
     cnt = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
@@ -44,10 +56,6 @@ def _shingles(text_col, n: int = 3):
         idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
     )
     return F.when(cnt >= n, grams).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    return df.withColumn("shingles", _shingles(F.col(text_col), n))
 
 
 def _scratch_dir(df: DataFrame, path: str | None, prefix: str) -> str:
@@ -83,24 +91,13 @@ def _scratch_dir(df: DataFrame, path: str | None, prefix: str) -> str:
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup on a normalized-text hash; keeps min(id) per group.
-
-    The group key is 128 bits (two independently-seeded xxhash64 columns):
-    a single 64-bit key expects ~n^2/2^65 collisions — ≈2.7x10^4 at n=10^12
-    docs, each one silently deleting a unique document (min-id keeps only one
-    row per bucket). At 128 bits the expectation is n^2/2^129 ≈ 1.5x10^-15:
-    zero for any physical corpus."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    # seed constant FIRST: Spark folds multi-arg xxhash64 left-to-right with
-    # the accumulated hash as the next seed, so xxhash64(norm, lit) would be
-    # a pure function of xxhash64(norm) — a fake second hash that collides
-    # exactly when the first does. lit-first gives X(norm, seed=X(lit, 42)),
-    # a genuinely different fixed seed.
-    h = df.withColumn("__fp1", F.xxhash64(norm)).withColumn(
-        "__fp2", F.xxhash64(F.lit(0x9E3779B9).cast("long"), norm)
-    )
-    keep = h.groupBy("__fp1", "__fp2").agg(F.min(id_col).alias(id_col))
-    return h.join(keep, ["__fp1", "__fp2", id_col], "left_semi").drop("__fp1", "__fp2")
+    """Exact dedup on the normalized-text ``fingerprint``; keeps min(id) per
+    group. The group key is both fingerprint columns (128 bits): a single
+    64-bit key would silently delete unique documents at corpus scale (see
+    ``text.fingerprint`` for the collision math)."""
+    h = fingerprint(df, text_col, "__fp")
+    keep = h.groupBy("__fp", "__fpb").agg(F.min(id_col).alias(id_col))
+    return h.join(keep, ["__fp", "__fpb", id_col], "left_semi").drop("__fp", "__fpb")
 
 
 def _perm_coeffs(num_hashes: int, seed: int):
@@ -109,20 +106,84 @@ def _perm_coeffs(num_hashes: int, seed: int):
     return a, b
 
 
+def _token_hashes(texts):
+    """The text kernels' shared front end, vectorized over one Arrow batch:
+    normalize (null -> '', strip, lowercase, collapse whitespace), split on
+    spaces, and hash each UNIQUE token once (``pd.factorize`` +
+    ``pd.util.hash_array``: C-level, fixed key, deterministic). Returns the
+    normalized strings, per-row token counts, uint64 token hashes over the
+    flattened token stream, and each token's row id."""
+    s = texts.fillna("").astype(str).str.strip().str.lower()
+    s = s.str.replace(r"\s+", " ", regex=True)
+    toks = s.str.split(" ")
+    lens = toks.str.len().to_numpy(dtype=np.int64)
+    codes, uniq = pd.factorize(np.concatenate(toks.to_numpy()))
+    th = pd.util.hash_array(uniq.astype(object)).astype(np.uint64)[codes]
+    rid = np.repeat(np.arange(len(texts)), lens)
+    return s, lens, th, rid
+
+
+def _ngram_hashes(s, lens, th, rid, n: int, mod: int | None = None):
+    """Rolling-polynomial word n-gram hashes from ``_token_hashes`` output ->
+    ``(hashes, counts)``: every row's n-gram hashes in row order, ``counts``
+    per row (always >= 1). Windows crossing a row boundary are masked out;
+    a row shorter than n tokens gets ONE shingle, the hash of its whole
+    normalized string (the ``_shingles`` fallback). ``mod=_P``: the 31-bit
+    modular family (int64; no step overflows: < 2^31 x 1_000_003 + 2^31);
+    ``None``: uint64 wraparound arithmetic."""
+    if mod is not None:
+        th = (th % mod).astype(np.int64)
+    poly_a = th.dtype.type(1_000_003)
+    top = len(th) - n + 1
+    if top > 0:
+        sh = th[:top]
+        for k in range(1, n):
+            sh = sh * poly_a + th[k : top + k]
+            if mod is not None:
+                sh %= mod
+        sh = sh[rid[:top] == rid[n - 1 :]]
+    else:
+        sh = th[:0]
+    short = lens < n
+    counts = np.where(short, 1, lens - n + 1)
+    if short.any():
+        h0 = pd.util.hash_array(s[short].to_numpy(dtype=object))
+        if mod is not None:
+            h0 = (h0 % mod).astype(np.int64)
+        out = np.empty(int(counts.sum()), dtype=sh.dtype)
+        at = np.repeat(short, counts)
+        out[at], out[~at] = h0, sh
+        sh = out
+    return sh, counts
+
+
+def _text_udf(kernel, empty_dtype, return_type: str):
+    """pandas_udf over a text kernel ``texts -> values``; an empty batch
+    yields an empty Series of ``empty_dtype``."""
+
+    def udf(texts):
+        if len(texts) == 0:
+            return pd.Series([], dtype=empty_dtype)
+        return kernel(texts)
+
+    # set annotations eagerly: this module uses postponed annotation
+    # evaluation, which pandas_udf's hint inspection can't resolve
+    udf.__annotations__ = {"texts": pd.Series, "return": pd.Series}
+    return pandas_udf(udf, return_type)
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_n: int = 3,
     seed: int = 42,
-    as_array: bool = False,
 ) -> DataFrame:
-    """K minhash values per doc, via ONE fused Arrow kernel over the raw text:
-    normalize + tokenize with pandas C string ops, token hashing via
-    ``pd.factorize`` + ``pd.util.hash_array`` (each unique token hashed once,
-    C-level, fixed key => deterministic), rolling-polynomial shingle hashes in
-    numpy (row boundaries masked), then K affine permutations + per-row
-    segment-min with ``np.minimum.reduceat``.
+    """K minhash values per doc in an ``array<long>`` column ``__sig``, via
+    ONE fused Arrow kernel over the raw text: the shared front end
+    (``_token_hashes`` + ``_ngram_hashes`` in the 31-bit modular family),
+    then K affine permutations + per-row segment-min with
+    ``np.minimum.reduceat``.
 
     Why fused: Spark evaluates higher-order array functions (``transform``)
     INTERPRETED, not whole-stage-codegen'd — the previous Catalyst
@@ -130,76 +191,26 @@ def minhash_signatures(
     versus ~1s for this kernel doing strictly more work. Never a per-row
     Python loop: every step is a vectorized C operation over the flattened
     token stream."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     av, bv = _perm_coeffs(num_hashes, seed)
-    a_arr = np.asarray(av, dtype=np.int64)[:, None]
-    b_arr = np.asarray(bv, dtype=np.int64)[:, None]
-    poly_a = 1_000_003  # < 2^31: keeps every combine step under 2^62 (ANSI-safe)
 
     def mh_kernel(texts):
-        n_rows = len(texts)
-        if n_rows == 0:
-            return pd.Series([], dtype=object)
-        s = texts.fillna("").astype(str).str.strip().str.lower()
-        s = s.str.replace(r"\s+", " ", regex=True)
-        toks = s.str.split(" ")
-        lens = toks.str.len().to_numpy(dtype=np.int64)
-        flat = np.concatenate(toks.to_numpy())  # object array of tokens
-        codes, uniq = pd.factorize(flat)
-        uh = (pd.util.hash_array(uniq.astype(object)) % _P).astype(np.int64)
-        th = uh[codes]  # per-token hash, < P < 2^31
-        rid = np.repeat(np.arange(n_rows), lens)
-        m = len(th)
-        # rolling n-gram polynomial hash over the flat token stream; positions
-        # whose n-token window crosses a row boundary are masked out
-        if m >= shingle_n:
-            top = m - shingle_n + 1
-            sh = th[:top].copy()
-            for k in range(1, shingle_n):
-                sh = (sh * poly_a + th[k : top + k]) % _P
-            valid = rid[:top] == rid[shingle_n - 1 :]
-            sh = sh[valid]
-        else:
-            sh = np.array([], dtype=np.int64)
-        counts = np.maximum(lens - shingle_n + 1, 0)
-        has = counts > 0
-        mins = np.empty((num_hashes, n_rows), dtype=np.int64)
-        if has.any():
-            offs = np.zeros(int(has.sum()), dtype=np.int64)
-            np.cumsum(counts[has][:-1], out=offs[1:])
-            # one hash function at a time with a preallocated buffer: the
-            # previous (K, n_shingles) broadcast materialized K x 8B x n_sh
-            # (~128MB per 0.5M shingles) of temporaries — allocation- and
-            # memory-bandwidth-bound, and pathological under host memory
-            # pressure. A single n_sh buffer stays L2/L3-resident; same flops.
-            buf = np.empty_like(sh)
-            for k in range(num_hashes):
-                np.multiply(sh, a_arr[k, 0], out=buf)
-                buf += b_arr[k, 0]
-                buf %= _P
-                mins[k, has] = np.minimum.reduceat(buf, offs)
-        if (~has).any():
-            # short docs (< n tokens): single shingle = the whole normalized
-            # string, mirroring the Catalyst _shingles fallback
-            sh0 = (
-                pd.util.hash_array(s[~has].to_numpy(dtype=object)) % _P
-            ).astype(np.int64)
-            mins[:, ~has] = (sh0[None, :] * a_arr + b_arr) % _P
+        sh, counts = _ngram_hashes(*_token_hashes(texts), shingle_n, mod=_P)
+        offs = np.cumsum(counts) - counts
+        mins = np.empty((num_hashes, len(texts)), dtype=np.int64)
+        # one hash function at a time with a preallocated buffer: a
+        # (K, n_shingles) broadcast materializes K x 8B x n_sh (~128MB per
+        # 0.5M shingles) of temporaries — allocation- and memory-bandwidth-
+        # bound. A single n_sh buffer stays L2/L3-resident; same flops.
+        buf = np.empty_like(sh)
+        for k in range(num_hashes):
+            np.multiply(sh, np.int64(av[k]), out=buf)
+            buf += np.int64(bv[k])
+            buf %= _P
+            mins[k] = np.minimum.reduceat(buf, offs)
         return pd.Series(list(mins.T))
 
-    # set annotations eagerly: this module uses postponed annotation
-    # evaluation, which pandas_udf's hint inspection can't resolve
-    mh_kernel.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    mh_udf = pandas_udf(mh_kernel, "array<long>")
-
-    sig = df.withColumn("__sig", mh_udf(F.col(text_col)))
-    if as_array:
-        return sig.select(*df.columns, "__sig")
-    sig_cols = [F.element_at("__sig", k + 1).alias(f"mh_{k}") for k in range(num_hashes)]
-    return sig.select(*df.columns, *sig_cols)
+    mh_udf = _text_udf(mh_kernel, object, "array<long>")
+    return df.withColumn("__sig", mh_udf(F.col(text_col)))
 
 
 def _drop_hot_buckets(banded: DataFrame, bucket_cols: list[str], cap: int) -> DataFrame:
@@ -222,10 +233,51 @@ def _drop_hot_buckets(banded: DataFrame, bucket_cols: list[str], cap: int) -> Da
     return banded.join(F.broadcast(hot), bucket_cols, "left_anti")
 
 
+def _bucket_pairs(
+    banded: DataFrame,
+    id_col: str,
+    bucket_cols: list[str],
+    max_bucket: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)``, id_a < id_b, of rows sharing any
+    bucket: buckets above ``max_bucket`` members are dropped first
+    (_drop_hot_buckets), then a self-join on ``bucket_cols``, deduplicated
+    across the buckets a pair shares. Each ``carry`` column rides along as
+    ``{c}_a`` / ``{c}_b``."""
+    banded = _drop_hot_buckets(banded, bucket_cols, max_bucket)
+
+    def side(x):
+        return banded.select(
+            F.col(id_col).alias(f"id_{x}"),
+            *[F.col(c).alias(f"{c}_{x}") for c in carry],
+            *bucket_cols,
+        )
+
+    return (
+        side("a")
+        .join(side("b"), bucket_cols)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[f"{c}_{x}" for x in "ab" for c in carry])
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _materialize(tbl: DataFrame, path: str | None, prefix: str) -> DataFrame:
+    """Write ``tbl`` once as parquet and return the read-back table: the
+    barrier for a table several consumers read (both self-join sides and the
+    hot-bucket sketch), which would otherwise each re-run the kernel subtree
+    over the full input. ``path`` None resolves a local scratch dir with
+    exit cleanup (_scratch_dir)."""
+    path = _scratch_dir(tbl, path, prefix)
+    tbl.write.mode("overwrite").parquet(path)
+    return tbl.sparkSession.read.parquet(path)
+
+
 def _shingle_hash_udf(shingle_n: int):
     """Fused Arrow kernel: text -> array<long> of DISTINCT 64-bit shingle
-    hashes (uint64 rolling-polynomial over factorized token hashes, viewed as
-    int64 — the simhash kernel's hash family).
+    hashes (the shared front end in its uint64 family, viewed as int64 —
+    the simhash kernel's hash family), ascending as uint64.
 
     Used by the candidate-verification stage: exact Jaccard over hashed
     shingle sets equals Jaccard over string shingle sets except when two
@@ -236,36 +288,10 @@ def _shingle_hash_udf(shingle_n: int):
     for 10k candidate docs at sf0.1 vs ~1s for this kernel — and int64 arrays
     make the downstream array_intersect an integer comparison instead of a
     string comparison."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    poly_a = np.uint64(1_000_003)
 
     def kernel(texts):
-        n_rows = len(texts)
-        if n_rows == 0:
-            return pd.Series([], dtype=object)
-        s = texts.fillna("").astype(str).str.strip().str.lower()
-        s = s.str.replace(r"\s+", " ", regex=True)
-        toks = s.str.split(" ")
-        lens = toks.str.len().to_numpy(dtype=np.int64)
-        flat = np.concatenate(toks.to_numpy())
-        codes, uniq = pd.factorize(flat)
-        uh = pd.util.hash_array(uniq.astype(object)).astype(np.uint64)
-        th = uh[codes]
-        rid = np.repeat(np.arange(n_rows), lens)
-        m = len(th)
-        if m >= shingle_n:
-            top = m - shingle_n + 1
-            sh = th[:top].copy()
-            for k in range(1, shingle_n):
-                sh = sh * poly_a + th[k : top + k]  # uint64 wraparound
-            valid = rid[:top] == rid[shingle_n - 1 :]
-            sh, srid = sh[valid], rid[:top][valid]
-        else:
-            sh = np.array([], dtype=np.uint64)
-            srid = np.array([], dtype=np.int64)
+        sh, counts = _ngram_hashes(*_token_hashes(texts), shingle_n)
+        srid = np.repeat(np.arange(len(texts)), counts)
         # per-row DISTINCT sets, fully vectorized: lexsort by (row, hash),
         # drop adjacent duplicates, then split at row boundaries
         order = np.lexsort((sh, srid))
@@ -273,23 +299,10 @@ def _shingle_hash_udf(shingle_n: int):
         keep = np.ones(len(sh), dtype=bool)
         keep[1:] = (sh[1:] != sh[:-1]) | (srid[1:] != srid[:-1])
         sh, srid = sh[keep], srid[keep]
-        cnt = np.bincount(srid, minlength=n_rows)
-        parts = np.split(sh.view(np.int64), np.cumsum(cnt)[:-1])
-        # short docs (< n tokens): single shingle = the whole normalized
-        # string, mirroring the Catalyst _shingles fallback
-        short = lens < shingle_n
-        if short.any():
-            sh0 = pd.util.hash_array(s[short].to_numpy(dtype=object)).astype(
-                np.uint64
-            )
-            out = list(parts)
-            for i, h0 in zip(np.nonzero(short)[0], sh0.view(np.int64)):
-                out[i] = np.array([h0], dtype=np.int64)
-            return pd.Series(out)
-        return pd.Series(list(parts))
+        cnt = np.bincount(srid, minlength=len(texts))
+        return pd.Series(np.split(sh.view(np.int64), np.cumsum(cnt)[:-1]))
 
-    kernel.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "array<long>")
+    return _text_udf(kernel, object, "array<long>")
 
 
 def minhash_lsh_pairs(
@@ -351,9 +364,7 @@ def minhash_lsh_pairs(
     from pitfeat.ops.util import widen_partitions
 
     df = widen_partitions(df, key=id_col)
-    sig = minhash_signatures(
-        df, text_col, num_hashes, shingle_n, seed, as_array=True
-    )
+    sig = minhash_signatures(df, text_col, num_hashes, shingle_n, seed)
     # band hash = xxhash64 over the band's slice of the signature array
     # (single array column; avoids fanning the signature out to K columns)
     band_structs = F.array(
@@ -376,28 +387,21 @@ def minhash_lsh_pairs(
     # (id, K-long signature) only; shingle arrays are recomputed from text
     # for candidate rows alone, because at corpus scale writing every doc's
     # shingle set costs far more than re-shingling the candidates.
-    auto_scratch = sig_path is None
-    sig_path = _scratch_dir(df, sig_path, "pitfeat_minhash_sig_")
     # __tlen rides along so the small-corpus gate below can know the corpus's
     # total TEXT volume exactly without re-scanning the corpus (ADVICE r4:
     # a row-count-only gate would broadcast multi-GB shingle arrays for 50k
     # long documents)
-    sig.select(
-        F.col(id_col), "__sig", F.length(F.col(text_col)).cast("long").alias("__tlen")
-    ).write.mode("overwrite").parquet(sig_path)
-    sig = df.sparkSession.read.parquet(sig_path)
+    sig = _materialize(
+        sig.select(
+            F.col(id_col), "__sig", F.length(F.col(text_col)).cast("long").alias("__tlen")
+        ),
+        sig_path,
+        "pitfeat_minhash_sig_",
+    )
     banded = sig.select(F.col(id_col), F.explode(band_structs).alias("bb")).select(
         id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
     )
-    banded = _drop_hot_buckets(banded, ["band", "bh"], max_bucket)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bh")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _bucket_pairs(banded, id_col, ["band", "bh"], max_bucket)
     # Shingle each candidate doc ONCE, on the far side of a join boundary:
     # referencing the shingle expression directly in the intersect/union/
     # filter expressions re-evaluates it ~4x per pair (no CSE across those
@@ -443,14 +447,9 @@ def minhash_lsh_pairs(
     # The gate reads (count, sum(__tlen)) FROM THE WRITTEN SIG PARQUET — one
     # slim-column job, never a pass over the corpus itself.
     if not small:
-        sh_path = sig_path.rstrip("/") + "_cand_shingles"
-        if auto_scratch:
-            import atexit
-            import shutil
-
-            atexit.register(shutil.rmtree, sh_path, ignore_errors=True)
-        sh_tbl.write.mode("overwrite").parquet(sh_path)
-        sh_tbl = df.sparkSession.read.parquet(sh_path)
+        # next to a caller-given sig_path; otherwise a scratch dir of its own
+        sh_path = sig_path and sig_path.rstrip("/") + "_cand_shingles"
+        sh_tbl = _materialize(sh_tbl, sh_path, "pitfeat_minhash_cand_")
         cand = cand.join(
             sh_tbl.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
         ).join(
@@ -519,11 +518,11 @@ def ngram_jaccard(
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard for two (small) candidate sets — the
     verification primitive. For full-table dedup use minhash_lsh_pairs."""
-    a = with_shingles(df_a, text_col, shingle_n).select(
-        F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
+    a = df_a.select(
+        F.col(id_col).alias("id_a"), _shingles(F.col(text_col), shingle_n).alias("sh_a")
     )
-    b = with_shingles(df_b, text_col, shingle_n).select(
-        F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")
+    b = df_b.select(
+        F.col(id_col).alias("id_b"), _shingles(F.col(text_col), shingle_n).alias("sh_b")
     )
     pairs = a.crossJoin(F.broadcast(b))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
@@ -540,70 +539,30 @@ def simhash(df: DataFrame, text_col: str = "text", shingle_n: int = 2) -> DataFr
 
     One fused Arrow kernel (same rationale as minhash_signatures: Catalyst
     higher-order functions run interpreted — the previous 64-aggregate
-    expression tree took 32.6s for 10k docs at sf0.1, this kernel ~1s):
-    tokenize with pandas C string ops, hash unique tokens once
-    (factorize + hash_array, uint64), rolling uint64 polynomial n-gram
-    hashes (numpy wraparound arithmetic, row-boundary masked), bit-unpack to
-    a (shingles x 64) +/-1 vote matrix, per-row segment-sum via
-    np.add.reduceat, sign-pack back to one int64."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    poly_a = np.uint64(1_000_003)
+    expression tree took 32.6s for 10k docs at sf0.1, this kernel ~1s): the
+    shared front end in its uint64 family, then per bit a +/-1 vote summed
+    per row with np.add.reduceat, sign-packed back to one int64."""
     bit_idx = np.arange(64, dtype=np.uint64)
 
     def sh_kernel(texts):
-        n_rows = len(texts)
-        if n_rows == 0:
-            return pd.Series([], dtype="int64")
-        s = texts.fillna("").astype(str).str.strip().str.lower()
-        s = s.str.replace(r"\s+", " ", regex=True)
-        toks = s.str.split(" ")
-        lens = toks.str.len().to_numpy(dtype=np.int64)
-        flat = np.concatenate(toks.to_numpy())
-        codes, uniq = pd.factorize(flat)
-        uh = pd.util.hash_array(uniq.astype(object)).astype(np.uint64)
-        th = uh[codes]
-        rid = np.repeat(np.arange(n_rows), lens)
-        m = len(th)
-        if m >= shingle_n:
-            top = m - shingle_n + 1
-            sh = th[:top].copy()
-            for k in range(1, shingle_n):
-                sh = sh * poly_a + th[k : top + k]  # uint64 wraparound, C-level
-            sh = sh[rid[:top] == rid[shingle_n - 1 :]]
-        else:
-            sh = np.array([], dtype=np.uint64)
-        counts = np.maximum(lens - shingle_n + 1, 0)
-        has = counts > 0
-        sums = np.zeros((n_rows, 64), dtype=np.int64)
-        if has.any():
-            offs = np.zeros(int(has.sum()), dtype=np.int64)
-            np.cumsum(counts[has][:-1], out=offs[1:])
-            # per-bit loop with one n_sh buffer instead of an (n_sh, 64)
-            # +/-1 vote matrix (~256MB per 0.5M shingles): same flops,
-            # cache-resident temporaries (see the minhash kernel's identical
-            # blocking rationale)
-            ones = np.uint64(1)
-            for b in range(64):
-                bit = ((sh >> np.uint64(b)) & ones).astype(np.int64)
-                np.multiply(bit, 2, out=bit)
-                bit -= 1
-                sums[has, b] = np.add.reduceat(bit, offs)
-        if (~has).any():
-            sh0 = pd.util.hash_array(s[~has].to_numpy(dtype=object)).astype(np.uint64)
-            bits0 = ((sh0[:, None] >> bit_idx) & np.uint64(1)).astype(np.int64)
-            sums[~has] = 2 * bits0 - 1
+        sh, counts = _ngram_hashes(*_token_hashes(texts), shingle_n)
+        offs = np.cumsum(counts) - counts
+        sums = np.empty((len(texts), 64), dtype=np.int64)
+        # per-bit loop with one n_sh buffer instead of an (n_sh, 64) +/-1
+        # vote matrix (~256MB per 0.5M shingles): same flops, cache-resident
+        # temporaries (the minhash kernel's blocking rationale)
+        ones = np.uint64(1)
+        for b in range(64):
+            bit = ((sh >> np.uint64(b)) & ones).astype(np.int64)
+            np.multiply(bit, 2, out=bit)
+            bit -= 1
+            sums[:, b] = np.add.reduceat(bit, offs)
         packed = (((sums > 0).astype(np.uint64)) << bit_idx).sum(
             axis=1, dtype=np.uint64
         )
         return pd.Series(packed.view(np.int64))
 
-    sh_kernel.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    sh_udf = pandas_udf(sh_kernel, "long")
-
-    return df.withColumn("simhash", sh_udf(F.col(text_col)))
+    return df.withColumn("simhash", _text_udf(sh_kernel, "int64", "long")(F.col(text_col)))
 
 
 def simhash_near_pairs(
@@ -626,9 +585,7 @@ def simhash_near_pairs(
     from pitfeat.ops.util import widen_partitions
 
     s = simhash(widen_partitions(df, key=id_col), text_col).select(id_col, "simhash")
-    sig_path = _scratch_dir(df, sig_path, "pitfeat_simhash_sig_")
-    s.write.mode("overwrite").parquet(sig_path)
-    s = df.sparkSession.read.parquet(sig_path)
+    s = _materialize(s, sig_path, "pitfeat_simhash_sig_")
     segs = F.array(
         *[
             F.struct(
@@ -639,16 +596,9 @@ def simhash_near_pairs(
         ]
     )
     e = s.select(id_col, "simhash", F.explode(segs).alias("x")).select(
-        id_col, "simhash", F.col("x.seg").alias("seg"), F.col("x.sv").alias("sv")
+        id_col, F.col("simhash").alias("h"), F.col("x.seg").alias("seg"), F.col("x.sv").alias("sv")
     )
-    e = _drop_hot_buckets(e, ["seg", "sv"], max_bucket)
-    a = e.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a"), "seg", "sv")
-    b = e.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b"), "seg", "sv")
-    cand = (
-        a.join(b, ["seg", "sv"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _bucket_pairs(e, id_col, ["seg", "sv"], max_bucket, carry=("h",))
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return cand.select("id_a", "id_b", ham.alias("hamming")).where(
         F.col("hamming") <= max_hamming

@@ -549,23 +549,10 @@ def embedding_near_dup_pairs(
     s = _multi_table_buckets(base, "__v", nbits, tables, dim, seed).select(
         F.col(id_col), "tbl", "bucket"
     )
-    from pitfeat.ops.dedup import _scratch_dir
+    from pitfeat.ops.dedup import _bucket_pairs, _materialize
 
-    bucket_path = _scratch_dir(df, bucket_path, "pitfeat_embdup_buckets_")
-    s.write.mode("overwrite").parquet(bucket_path)
-    s = df.sparkSession.read.parquet(bucket_path)
-    if max_bucket > 0:
-        from pitfeat.ops.dedup import _drop_hot_buckets
-
-        s = _drop_hot_buckets(s, ["tbl", "bucket"], max_bucket)
-    a = s.select(F.col(id_col).alias("id_a"), "tbl", "bucket")
-    b = s.select(F.col(id_col).alias("id_b"), "tbl", "bucket")
-    cand = (
-        a.join(b, ["tbl", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    s = _materialize(s, bucket_path, "pitfeat_embdup_buckets_")
+    cand = _bucket_pairs(s, id_col, ["tbl", "bucket"], max_bucket)
     cand = cand.join(
         base.select(F.col(id_col).alias("id_a"), F.col("__v").alias("va")), "id_a"
     ).join(base.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vb")), "id_b")
@@ -1109,11 +1096,10 @@ def knn_join(
         )
 
     if method == "lsh":
-        assigned = _multi_table_buckets(valid, "__v", nbits, tables, dim, seed)
-        if max_bucket > 0:
-            from pitfeat.ops.dedup import _drop_hot_buckets
+        from pitfeat.ops.dedup import _drop_hot_buckets
 
-            assigned = _drop_hot_buckets(assigned, ["tbl", "bucket"], max_bucket)
+        assigned = _multi_table_buckets(valid, "__v", nbits, tables, dim, seed)
+        assigned = _drop_hot_buckets(assigned, ["tbl", "bucket"], max_bucket)
 
         def bucket_kernel(tab: "pa.Table") -> "pa.Table":
             it = tab.schema.field(id_col).type

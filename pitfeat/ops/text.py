@@ -1,10 +1,12 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All JVM-side Catalyst expressions (no Python in the hot path): language-ID by
-stopword-hit heuristic, quality scoring (length / punctuation / stopword
-ratios), token counting (whitespace + BPE-ish regex), and rolling-hash document
-fingerprinting. Designed for the ``documents`` table shape
-(doc_id, text, lang, source, n_chars) but generic over any text column.
+Language-ID by stopword-hit heuristic, token counting (whitespace + BPE-ish
+regex) and document fingerprinting (two independently-seeded xxhash64
+columns over the normalized text; ``dedup.exact_dedup`` keys on them) are
+JVM-side Catalyst expressions. Quality scoring (length / punctuation /
+stopword ratios) takes its three integer counts from one fused Arrow kernel.
+Designed for the ``documents`` table shape (doc_id, text, lang, source,
+n_chars) but generic over any text column.
 """
 
 from __future__ import annotations

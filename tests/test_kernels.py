@@ -1,14 +1,17 @@
-"""Edge cases and determinism for the fused text kernels (minhash, simhash)
-and a property-based as-of check (hypothesis over randomized frames)."""
+"""Edge cases, determinism and bit-exact output pins for the fused text
+kernels (minhash, simhash, hashed shingle sets) and a property-based as-of
+check (hypothesis over randomized frames)."""
 
 import datetime as dt
+import hashlib
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
 from pitfeat.ops.asof import asof_join
-from pitfeat.ops.dedup import minhash_signatures, simhash
+from pitfeat.ops.dedup import _shingle_hash_udf, minhash_signatures, simhash
 
 EDGE_TEXTS = [
     (0, ""),                       # empty
@@ -30,8 +33,8 @@ def edge_docs(spark):
 
 
 def test_minhash_kernel_edges_deterministic(edge_docs):
-    a = {r["doc_id"]: r["__sig"] for r in minhash_signatures(edge_docs, as_array=True).collect()}
-    b = {r["doc_id"]: r["__sig"] for r in minhash_signatures(edge_docs, as_array=True).collect()}
+    a = {r["doc_id"]: r["__sig"] for r in minhash_signatures(edge_docs).collect()}
+    b = {r["doc_id"]: r["__sig"] for r in minhash_signatures(edge_docs).collect()}
     assert a == b  # deterministic across runs
     assert all(len(v) == 32 for v in a.values())  # fixed width, even for empty/null
     assert all(all(0 <= x < (1 << 31) for x in v) for v in a.values())
@@ -50,7 +53,7 @@ def test_minhash_matches_catalyst_shingle_semantics(spark):
     docs = spark.createDataFrame(
         [(0, "  Hello   World "), (1, "hello world")], "doc_id long, text string"
     )
-    sigs = {r["doc_id"]: r["__sig"] for r in minhash_signatures(docs, as_array=True).collect()}
+    sigs = {r["doc_id"]: r["__sig"] for r in minhash_signatures(docs).collect()}
     assert sigs[0] == sigs[1]
 
 
@@ -61,6 +64,46 @@ def test_simhash_kernel_edges_deterministic(edge_docs):
     assert a[9] == a[0] and a[1] == a[0]
     # near-identical docs (case/whitespace) collide, distinct docs spread
     assert len(set(a.values())) >= 6
+
+
+# sha256 over (doc_id, length, int64 values) of every output row, doc_id
+# ascending, on EDGE_TEXTS plus the sf0.001 documents (doc_id + 1000)
+KERNEL_DIGESTS = {
+    "minhash_32_3": "a7c73efba12ad91a10632571a1c2924199d92b959388d8ad600c491cb787197c",
+    "minhash_16_2": "e8c47747ded11d86480332f21e40ff50bcb346e4e50b516e905654f9cb6e8672",
+    "simhash_2": "edaf84214b68497584c09092a9dbca6928985808f6ee308cfa95149a25bf8701",
+    "shingle_hash_3": "fb34a5e2a5bb9b14d64fa89978dc7fd133054d7d3396fc8dac3f25e2e9c1e52d",
+}
+
+
+def _digest(rows) -> str:
+    h = hashlib.sha256()
+    for doc_id, v in sorted(rows, key=lambda r: r[0]):
+        a = np.atleast_1d(np.asarray(v, dtype=np.int64))
+        h.update(np.asarray([doc_id, len(a)], dtype=np.int64).tobytes())
+        h.update(a.tobytes())
+    return h.hexdigest()
+
+
+def test_text_kernels_bit_exact(spark, edge_docs):
+    """Pins every hash value the three text kernels emit: the determinism
+    and planted-duplicate checks elsewhere hold for any hash family, so
+    only a digest sees a changed modulus, polynomial or row-boundary mask."""
+    docs = edge_docs.unionByName(
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+            (F.col("doc_id") + 1000).alias("doc_id"), "text"
+        )
+    )
+    outs = {
+        "minhash_32_3": minhash_signatures(docs).select("doc_id", "__sig"),
+        "minhash_16_2": minhash_signatures(docs, num_hashes=16, shingle_n=2).select(
+            "doc_id", "__sig"
+        ),
+        "simhash_2": simhash(docs).select("doc_id", "simhash"),
+        "shingle_hash_3": docs.select("doc_id", _shingle_hash_udf(3)(F.col("text"))),
+    }
+    got = {k: _digest(map(tuple, df.collect())) for k, df in outs.items()}
+    assert got == KERNEL_DIGESTS
 
 
 try:

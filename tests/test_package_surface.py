@@ -1,12 +1,14 @@
-"""Public-surface pins: the package exports and the similarity entry points'
-signatures. A refactor that renames, drops or re-defaults any of them fails
-here instead of silently changing what callers (the driver contract,
-``bench.py``, the jobs) get."""
+"""Public-surface pins: the package exports and the similarity, near-dup and
+text entry points' signatures. A refactor that renames, drops or re-defaults
+any of them fails here instead of silently changing what callers (the driver
+contract, ``bench.py``, the jobs) get."""
 
 import inspect
 
 import pitfeat
+from pitfeat.ops import dedup as D
 from pitfeat.ops import similarity as S
+from pitfeat.ops import text as T
 
 EXPECTED_ALL = [
     "PitfeatConfig",
@@ -86,3 +88,55 @@ def test_package_all_is_pinned():
 def test_similarity_signatures_are_pinned():
     for name, want in EXPECTED_SIGNATURES.items():
         assert str(inspect.signature(getattr(S, name))) == want, name
+
+
+_DF = "df: 'DataFrame', "
+
+EXPECTED_NEAR_DUP_SIGNATURES = {
+    D: {
+        "exact_dedup": (
+            f"({_DF}text_col: 'str' = 'text', id_col: 'str' = 'doc_id') -> 'DataFrame'"
+        ),
+        "minhash_signatures": (
+            f"({_DF}text_col: 'str' = 'text', num_hashes: 'int' = 32, "
+            "shingle_n: 'int' = 3, seed: 'int' = 42) -> 'DataFrame'"
+        ),
+        "minhash_lsh_pairs": (
+            f"({_DF}text_col: 'str' = 'text', id_col: 'str' = 'doc_id', "
+            "num_hashes: 'int' = 32, bands: 'int' = 8, shingle_n: 'int' = 3, "
+            "threshold: 'float' = 0.7, seed: 'int' = 42, max_bucket: 'int' = 2000, "
+            "sig_path: 'str | None' = None, small_corpus_rows: 'int' = 262144, "
+            "small_corpus_bytes: 'int' = 67108864) -> 'DataFrame'"
+        ),
+        "simhash_near_pairs": (
+            f"({_DF}id_col: 'str' = 'doc_id', text_col: 'str' = 'text', "
+            "max_hamming: 'int' = 3, max_bucket: 'int' = 2000, "
+            "sig_path: 'str | None' = None) -> 'DataFrame'"
+        ),
+        "ngram_jaccard": (
+            "(df_a: 'DataFrame', df_b: 'DataFrame', id_col: 'str' = 'doc_id', "
+            "text_col: 'str' = 'text', shingle_n: 'int' = 3) -> 'DataFrame'"
+        ),
+        "connected_components": (
+            "(pairs: 'DataFrame', id_a: 'str' = 'id_a', id_b: 'str' = 'id_b', "
+            "out_id: 'str' = 'id', out_col: 'str' = 'component', "
+            "max_iter: 'int' = 50, stats: 'dict | None' = None) -> 'DataFrame'"
+        ),
+        "simhash": f"({_DF}text_col: 'str' = 'text', shingle_n: 'int' = 2) -> 'DataFrame'",
+        "_shingle_hash_udf": "(shingle_n: 'int')",
+        # __spark_entry__.py imports this private helper from pitfeat.ops.dedup
+        "_scratch_dir": f"({_DF}path: 'str | None', prefix: 'str') -> 'str'",
+    },
+    T: {
+        "fingerprint": (
+            f"({_DF}text_col: 'str' = 'text', out_col: 'str' = 'fp64') -> 'DataFrame'"
+        ),
+        "quality_score": f"({_DF}text_col: 'str' = 'text') -> 'DataFrame'",
+    },
+}
+
+
+def test_near_dup_and_text_signatures_are_pinned():
+    for mod, sigs in EXPECTED_NEAR_DUP_SIGNATURES.items():
+        for name, want in sigs.items():
+            assert str(inspect.signature(getattr(mod, name))) == want, name

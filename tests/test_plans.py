@@ -5,14 +5,28 @@ keep its shuffle count bounded, filters must reach the parquet scan, and no
 operator may leave cached blocks behind after its result is materialized.
 """
 
+import random
+import re
+
 import pyspark.sql.functions as F
 
+from pitfeat.ops import dedup as D
 from pitfeat.ops.asof import asof_join
 from pitfeat.ops.windows import rolling, sessionize, with_gap
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _node_counts(df) -> list[int]:
+    """[Exchange, Sort, Python-node] counts of the physical plan."""
+    plan = _plan(df)
+    return [
+        plan.count("Exchange"),
+        plan.count("Sort ["),
+        len(re.findall(r"\b\w*(?:EvalPython|InPandas|InArrow)\b", plan)),
+    ]
 
 
 def test_flagship_composition_exchange_count(transcripts, snapshots):
@@ -195,3 +209,42 @@ def test_window_asof_plan_shapes(spark):
         assert plan.count("Exchange") <= 1, (direction, plan[:1500])
         if direction != "nearest":
             assert "unboundedfollowing" not in plan.lower(), (direction, plan[:1500])
+
+
+def test_near_dup_plan_shapes(spark, tmp_path):
+    """Exchange, Sort and Python-node counts of the near-dup operators on a
+    small local corpus with planted duplicates: both minhash verify paths
+    (broadcast shingles, and the written candidate-shingle table forced by
+    a 10-byte corpus cap), simhash pairs, embedding pairs and exact dedup.
+    A shared-helper refactor must not add a shuffle, a sort or a kernel
+    pass to any of them."""
+    from pitfeat.ops.similarity import embedding_near_dup_pairs
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]
+    texts = [" ".join(rng.choices(vocab, k=rng.randint(1, 12))) for _ in range(30)]
+    docs = spark.createDataFrame(
+        list(enumerate(texts + texts[:10])), "doc_id long, text string"
+    )
+    vecs = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(30)]
+    emb = spark.createDataFrame(
+        list(enumerate(vecs + vecs[:10])), "vec_id long, embedding array<float>"
+    )
+    got = {
+        "minhash_broadcast": D.minhash_lsh_pairs(docs, sig_path=str(tmp_path / "mb")),
+        "minhash_written": D.minhash_lsh_pairs(
+            docs, sig_path=str(tmp_path / "mw"), small_corpus_bytes=10
+        ),
+        "simhash": D.simhash_near_pairs(docs, sig_path=str(tmp_path / "sh")),
+        "embedding": embedding_near_dup_pairs(
+            emb, dim=8, nbits=2, bucket_path=str(tmp_path / "eb")
+        ),
+        "exact": D.exact_dedup(docs),
+    }
+    assert {k: _node_counts(v) for k, v in got.items()} == {
+        "minhash_broadcast": [8, 0, 2],
+        "minhash_written": [8, 0, 0],
+        "simhash": [6, 0, 0],
+        "embedding": [11, 4, 2],
+        "exact": [3, 2, 0],
+    }
